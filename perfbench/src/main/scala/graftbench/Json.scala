@@ -1,0 +1,37 @@
+package graftbench
+
+/** Just enough JSON output for the run record: maps, sequences,
+  * strings, numbers, booleans and null.
+  */
+object Json {
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => apply(f.toDouble)
+    case n: java.lang.Number => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.sortBy(_._1.toString)
+        .map { case (k, x) => quote(k.toString) + ":" + apply(x) }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
+    case a: Array[_] => apply(a.toSeq)
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+}
