@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (SURVEY §6): runs the headline query set against
@@ -67,6 +69,13 @@ object Bench {
     // tracked at sf1/sf10 instead of only in the single-sample tail
     "text_quality_classifier_heldout")
 
+  /** Wall seconds of `body`. */
+  private def timed(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
   /** One full ingest pass for the `pgn_ingest` bench entry: 20k
     * sample games through parse → withStats → role doubling → the
     * range-partitioned sink, written to a throwaway dir (a real
@@ -76,61 +85,37 @@ object Bench {
     import graft.chess.{ChessPipeline, SamplePgn}
     val src = SamplePgn.ensureWritten(nFiles = 8, gamesPerFile = 2500)
     val out = java.nio.file.Files.createTempDirectory("bench_ingest")
-    try {
-      val t0 = System.nanoTime()
+    try timed {
       ChessPipeline.writePartitioned(
         ChessPipeline.toPlayerGameRole(ChessPipeline.withStats(
           ChessPipeline.parseGames(spark.read.format("pgn").load(src)))),
         out.toString)
-      (System.nanoTime() - t0) / 1e9
     } finally
       // don't bloat /tmp across the timed+warm-up runs — including
       // a failed one's partial write
       LocalFs.deleteRecursively(out)
   }
 
+  /** The default bench action: the registered query into the noop sink. */
+  private def noopWrite(name: String)(spark: SparkSession, sfDir: String): Double =
+    timed(SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save())
+
+  /** Bench entries that are not a [[noopWrite]], each returning its
+    * timed wall seconds.
+    */
+  private val actions: Map[String, (SparkSession, String) => Double] = Map(
+    "pgn_ingest" -> ((spark, _) => ingestOnce(spark)),
+    // the audit's counts ARE its materialization (each rider runs
+    // through an action inside graphAudit)
+    "graph_audit" -> ((spark, sfDir) => timed(Pipeline.graphAudit(spark, sfDir))))
+
   /** (wall, processCpu, gcTime) in seconds for one sample. */
   private final case class Sample(wall: Double, cpu: Double, gc: Double)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed-Aggregator plans (TopKAgg and friends) fall back to
-      // SORT-BASED aggregation past 128 distinct keys per task by
-      // default — the per-task candidate stream then gets fully
-      // sorted, the exact cost the O(k)-state aggregators exist to
-      // avoid (found by the r13 knnskew probe: the hot Voronoi task
-      // sorted 2e8 rows). 128k keys x O(k) state is a few tens of MB.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
-      // shuffles START wide and let AQE coalesce down (parallelismFirst
-      // keeps small exchanges at full parallelism): with the fixed
-      // 32-partition default, sf100's 600M-row sort-merge sides ran
-      // ~2 GB/partition and spilled — q5_volume measured 194 -> 147 s
-      // (-25%) with wide initial partitions. On a real cluster this is
-      // the knob that makes one session config survive 100x data drift.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 1024)
-      // ...and let AQE coalesce CACHED plans too, or every .cache()
-      // materializes all 1024 initial partitions and each downstream
-      // pass schedules 1024 mostly-empty tasks (dedup_incremental_bloom
-      // warm: 2.6 s wide-initials-only vs 0.7 s with this — the cached
-      // history index is tiny but was pinned at the initial width).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // let AQE convert a sort-merge join to broadcast-hash when the
-      // RUNTIME build side lands under 64 MB (the default 10 MB left
-      // q5_volume's 12.5 MB ASIA-orders side sorting 6M lineitem rows
-      // at sf1 - join stage 21.8 -> 3.0 CPU-s with the bump, r16).
-      // Runtime sizes are trustworthy where static estimates are not,
-      // so ONLY the adaptive threshold moves; the static 10 MB default
-      // stays (it guards against estimate-driven giant broadcasts).
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
     // Warm the session (parquet footer reads, codegen of a trivial
     // plan) so the first measured query doesn't pay session init.
     Tables.names.foreach(n =>
@@ -173,20 +158,7 @@ object Bench {
       try {
         val c0 = osBean.getProcessCpuTime
         val g0 = gcMillis()
-        val wall =
-          if (name == "pgn_ingest") ingestOnce(spark)
-          else if (name == "graph_audit") {
-            // the audit's counts ARE its materialization (each rider
-            // runs through an action inside graphAudit)
-            val t0 = System.nanoTime()
-            Pipeline.graphAudit(spark, sfDir)
-            (System.nanoTime() - t0) / 1e9
-          } else {
-            val t0 = System.nanoTime()
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
+        val wall = actions.getOrElse(name, noopWrite(name) _)(spark, sfDir)
         Sample(wall, (osBean.getProcessCpuTime - c0) / 1e9,
           (gcMillis() - g0) / 1e3)
       } finally Caches.sweep(spark)
@@ -203,17 +175,14 @@ object Bench {
       case None => Bench.headline
     }
 
+    def logFailure(what: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
     val failed = scala.collection.mutable.Set.empty[String]
     // warm-up pass (discarded); a query that throws here is reported
     // as -1 and skipped in the timed rounds
     if (warmup) headline.foreach { name =>
       try once(name)
-      catch {
-        case e: Throwable =>
-          System.err.println(
-            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-          failed += name
-      }
+      catch { case NonFatal(e) => logFailure(name, e); failed += name }
     }
     val live = headline.filterNot(failed)
     val samples = scala.collection.mutable.Map.empty[String, Vector[Sample]]
@@ -223,11 +192,7 @@ object Bench {
         val s = once(name)
         samples(name) = samples(name) :+ s
         System.err.println(f"[bench] pass $r: $name ${s.wall}%.1fs cpu ${s.cpu}%.1f")
-      } catch {
-        case e: Throwable =>
-          System.err.println(
-            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-      }
+      } catch { case NonFatal(e) => logFailure(name, e) }
     // queries still noisy after interleaving get up to 2 extra samples
     for (name <- live) {
       var extra = 0
@@ -235,7 +200,7 @@ object Bench {
           samples(name).map(_.wall).max > 3 * samples(name).map(_.wall).min &&
           extra < 2) {
         try samples(name) = samples(name) :+ once(name)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(e) => logFailure(name, e) }
         extra += 1
       }
     }
@@ -269,10 +234,7 @@ object Bench {
         .filterNot(headline.contains)
       val entries = tail.map { name =>
         val s = try once(name) catch {
-          case e: Throwable =>
-            System.err.println(
-              s"[bench] full: $name failed: ${e.getClass.getName}: ${e.getMessage}")
-            Sample(-1.0, -1.0, -1.0)
+          case NonFatal(e) => logFailure(s"full: $name", e); Sample(-1.0, -1.0, -1.0)
         }
         System.err.println(f"[bench] full: $name ${s.wall}%.2fs cpu ${s.cpu}%.2f")
         f""""$name":[${s.wall}%.3f,${s.cpu}%.3f,${s.gc}%.3f]"""

@@ -49,10 +49,22 @@ object Lineage {
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
   @volatile private[graft] var probePlans: Boolean = false
 
-  /** Materialize `df` now and return a frame whose plan starts from
-    * the materialized rows. See object doc for the two modes.
+  /** How a cut materializes: [[cut]], [[cutCounted]], [[cutLazy]] or
+    * [[cutHard]].
     */
-  def cut(df: DataFrame): DataFrame = {
+  private sealed trait Mode
+  private case object Eager extends Mode
+  private case object Counted extends Mode
+  private case object Lazy extends Mode
+  private case object Hard extends Mode
+
+  /** The one cut dispatch every mode goes through: probe the plan,
+    * then reliable `checkpoint()` when `graft.checkpoint.dir` is set
+    * (every mode; only counted pays a count, over the checkpoint
+    * files), else the mode's own materialization. The count is -1
+    * where the mode computes none.
+    */
+  private def cutAs(df: DataFrame, mode: Mode): (DataFrame, Long) = {
     if (probePlans) planProbe.add(df.queryExecution.executedPlan.toString)
     val spark = df.sparkSession
     spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
@@ -62,11 +74,18 @@ object Lineage {
         // (re)point it when unset or pointed elsewhere by a prior run
         if (!sc.getCheckpointDir.exists(_.startsWith(dir)))
           sc.setCheckpointDir(dir)
-        df.checkpoint()
+        val ck = df.checkpoint()
+        (ck, if (mode == Counted) ck.count() else -1L)
+      case None if mode == Hard => (df.localCheckpoint(), -1L)
       case None =>
-        org.apache.spark.sql.GraftSqlShim.persistCut(df)
+        org.apache.spark.sql.GraftSqlShim.persistCut(df, eager = mode != Lazy)
     }
   }
+
+  /** Materialize `df` now and return a frame whose plan starts from
+    * the materialized rows. See object doc for the two modes.
+    */
+  def cut(df: DataFrame): DataFrame = cutAs(df, Eager)._1
 
   /** [[cut]] that also returns the materialized row count. The default
     * mode's persist-materialization computes this count anyway (its
@@ -75,20 +94,7 @@ object Lineage {
     * an extra count job. Reliable-checkpoint mode pays one cheap count
     * over the checkpoint files.
     */
-  def cutCounted(df: DataFrame): (DataFrame, Long) = {
-    if (probePlans) planProbe.add(df.queryExecution.executedPlan.toString)
-    val spark = df.sparkSession
-    spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
-      case Some(dir) =>
-        val sc = spark.sparkContext
-        if (!sc.getCheckpointDir.exists(_.startsWith(dir)))
-          sc.setCheckpointDir(dir)
-        val ck = df.checkpoint()
-        (ck, ck.count())
-      case None =>
-        org.apache.spark.sql.GraftSqlShim.persistCutCounted(df)
-    }
-  }
+  def cutCounted(df: DataFrame): (DataFrame, Long) = cutAs(df, Counted)
 
   /** [[cut]] WITHOUT the eager materializing count — for loops whose
     * very next step is already an action over the new frame (BPE's
@@ -99,16 +105,9 @@ object Lineage {
     * the PREVIOUS round's blocks persisted until the next action has
     * run (they are the lazy frame's recompute source) — free with
     * [[free]] after that action, never before. Reliable-checkpoint
-    * mode has no lazy form; it falls back to [[cut]].
+    * mode has no lazy form; it checkpoints eagerly like [[cut]].
     */
-  def cutLazy(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (spark.conf.getOption(ConfKey).exists(_.nonEmpty)) cut(df)
-    else {
-      if (probePlans) planProbe.add(df.queryExecution.executedPlan.toString)
-      org.apache.spark.sql.GraftSqlShim.persistCutLazy(df)
-    }
-  }
+  def cutLazy(df: DataFrame): DataFrame = cutAs(df, Lazy)._1
 
   /** Scale-adaptive partition width for an iterative loop's
     * co-partitioned frames (guide §2.4): the loops cut their state
@@ -167,14 +166,7 @@ object Lineage {
     * THIS frame — an accepted, bounded exposure paid once per cap
     * window, not per round).
     */
-  def cutHard(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (spark.conf.getOption(ConfKey).exists(_.nonEmpty)) cut(df)
-    else {
-      if (probePlans) planProbe.add(df.queryExecution.executedPlan.toString)
-      df.localCheckpoint()
-    }
-  }
+  def cutHard(df: DataFrame): DataFrame = cutAs(df, Hard)._1
 
   /** Drop a [[cut]] frame's persisted blocks. Safe whenever nothing
     * still NEEDS the materialization (the default mode recomputes on a

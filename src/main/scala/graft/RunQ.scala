@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: run named queries from SparkEntry against a sf dir.
   * Usage: runMain graft.RunQ <sfDir> name1 name2 ...  ("explain" flag
@@ -10,23 +9,10 @@ import org.apache.spark.sql.SparkSession
   */
 object RunQ {
 
-  /** Accumulates stage-level shuffle bytes; reset per query. */
-  private class ShuffleTotals extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong()
-    val written = new java.util.concurrent.atomic.AtomicLong()
-    override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
-      val m = st.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def reset(): Unit = { read.set(0L); written.set(0L) }
-  }
-
   /** Per-STAGE resource table (SPARK_GRAFT_STAGES=1): one row per
     * completed stage — tasks, wall/CPU seconds, shuffle read/write,
-    * records, spill. The r14 attribution instrument: a per-query CPU
+    * records, spill. Its shuffle columns also give the per-query
+    * totals of SPARK_GRAFT_METRICS=1. The r14 attribution instrument: a per-query CPU
     * total says a query got slower; this says WHICH exchange boundary
     * carries the growth across scale tiers (run the same query at
     * sf10 and sf100, diff the tables stage-by-stage).
@@ -60,64 +46,28 @@ object RunQ {
           f"${r.swRecs}%9d ${r.spillMB}%8.1f ${r.inMB}%8.1f  ${r.name}")
       }
     }
+    /** (shuffle MiB written, shuffle MiB read) over the rows so far. */
+    def shuffleMB: (Double, Double) = {
+      import scala.jdk.CollectionConverters._
+      val rs = rows.asScala
+      (rs.map(_.swMB).sum, rs.map(_.srMB).sum)
+    }
     def reset(): Unit = rows.clear()
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    // dev knobs: core count (default 8 — the quick-iteration shape) and
-    // arbitrary conf overrides "k=v;k=v" for A/B plan probes (the
-    // instrument behind §8's AQE-partition-sizing measurements).
+    // dev knob: arbitrary conf overrides "k=v;k=v" for A/B plan probes
+    // (the instrument behind §8's AQE-partition-sizing measurements).
     // Note conf VALUES cannot contain ';' (the split delimiter).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // "*" is a valid local[] master but not a partition count — only
-    // mirror cpus into shuffle.partitions when it parses as an Int
-    val cpusInt = cpus.toIntOption
     val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).filter(_.contains('='))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-    val builder = cpusInt.fold(builder0)(n =>
-      builder0.config("spark.sql.shuffle.partitions", n))
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed-Aggregator plans (TopKAgg and friends) fall back to
-      // SORT-BASED aggregation past 128 distinct keys per task by
-      // default — the per-task candidate stream then gets fully
-      // sorted, the exact cost the O(k)-state aggregators exist to
-      // avoid (found by the r13 knnskew probe: the hot Voronoi task
-      // sorted 2e8 rows). 128k keys x O(k) state is a few tens of MB.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
-      // shuffles START wide and let AQE coalesce down (parallelismFirst
-      // keeps small exchanges at full parallelism): with the fixed
-      // 32-partition default, sf100's 600M-row sort-merge sides ran
-      // ~2 GB/partition and spilled — q5_volume measured 194 -> 147 s
-      // (-25%) with wide initial partitions. On a real cluster this is
-      // the knob that makes one session config survive 100x data drift.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 1024)
-      // ...and let AQE coalesce CACHED plans too, or every .cache()
-      // materializes all 1024 initial partitions and each downstream
-      // pass schedules 1024 mostly-empty tasks (dedup_incremental_bloom
-      // warm: 2.6 s wide-initials-only vs 0.7 s with this — the cached
-      // history index is tiny but was pinned at the initial width).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // let AQE convert a sort-merge join to broadcast-hash when the
-      // RUNTIME build side lands under 64 MB (the default 10 MB left
-      // q5_volume's 12.5 MB ASIA-orders side sorting 6M lineitem rows
-      // at sf1 - join stage 21.8 -> 3.0 CPU-s with the bump, r16).
-      // Runtime sizes are trustworthy where static estimates are not,
-      // so ONLY the adaptive threshold moves; the static 10 MB default
-      // stays (it guards against estimate-driven giant broadcasts).
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "ERROR"))
-    val totals = if (sys.env.contains("SPARK_GRAFT_METRICS")) {
-      val t = new ShuffleTotals; spark.sparkContext.addSparkListener(t); Some(t)
-    } else None
-    val stages = if (sys.env.contains("SPARK_GRAFT_STAGES")) {
+    val spark = Session.start(
+      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "ERROR"), extra)
+    val metrics = sys.env.contains("SPARK_GRAFT_METRICS")
+    val dumpStages = sys.env.contains("SPARK_GRAFT_STAGES")
+    val stages = if (metrics || dumpStages) {
       val t = new StageTable; spark.sparkContext.addSparkListener(t); Some(t)
     } else None
     val planMetrics = sys.env.contains("SPARK_GRAFT_PLANMETRICS")
@@ -128,7 +78,6 @@ object RunQ {
     var lastExecId = -1L
     for (name <- args.tail) {
       val t0 = System.nanoTime()
-      totals.foreach(_.reset())
       stages.foreach(_.reset())
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -137,14 +86,14 @@ object RunQ {
         // (count() would let Catalyst prune the expensive projections).
         df.write.format("noop").mode("overwrite").save()
         println(f"[runq] $name: materialized in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        totals.foreach { t =>
+        if (metrics) stages.foreach { t =>
           // listener events drain asynchronously; flush before reading
           org.apache.spark.sql.GraftSqlShim.flushListeners(spark)
-          println(f"[runq] $name shuffle: write ${t.written.get / 1048576.0}%.1f MiB, " +
-            f"read ${t.read.get / 1048576.0}%.1f MiB")
+          val (written, read) = t.shuffleMB
+          println(f"[runq] $name shuffle: write $written%.1f MiB, read $read%.1f MiB")
         }
         if (sys.env.contains("SPARK_GRAFT_SHOW")) df.show(5, 80)
-      } catch { case e: Throwable =>
+      } catch { case scala.util.control.NonFatal(e) =>
         println(s"[runq] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
         e.getStackTrace.take(10).foreach(f => println(s"   at $f"))
         Option(e.getCause).foreach(c =>
@@ -186,7 +135,7 @@ object RunQ {
             s"${e.getClass.getName}: ${e.getMessage}")
         }
         lastExecId = windowEnd
-        try stages.foreach { t =>
+        try if (dumpStages) stages.foreach { t =>
           org.apache.spark.sql.GraftSqlShim.flushListeners(spark)
           t.dump(name)
         } catch { case scala.util.control.NonFatal(e) =>

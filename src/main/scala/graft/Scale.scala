@@ -198,42 +198,7 @@ object Scale {
     val baseSf =
       if (viralMode) "" else args.headOption.getOrElse("/root/testdata/sf0.01")
     val copies = args.lift(1).map(_.toInt).getOrElse(if (viralMode) 1000000 else 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed-Aggregator plans (TopKAgg and friends) fall back to
-      // SORT-BASED aggregation past 128 distinct keys per task by
-      // default — the per-task candidate stream then gets fully
-      // sorted, the exact cost the O(k)-state aggregators exist to
-      // avoid (found by the r13 knnskew probe: the hot Voronoi task
-      // sorted 2e8 rows). 128k keys x O(k) state is a few tens of MB.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
-      // shuffles START wide and let AQE coalesce down (parallelismFirst
-      // keeps small exchanges at full parallelism): with the fixed
-      // 32-partition default, sf100's 600M-row sort-merge sides ran
-      // ~2 GB/partition and spilled — q5_volume measured 194 -> 147 s
-      // (-25%) with wide initial partitions. On a real cluster this is
-      // the knob that makes one session config survive 100x data drift.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 1024)
-      // ...and let AQE coalesce CACHED plans too, or every .cache()
-      // materializes all 1024 initial partitions and each downstream
-      // pass schedules 1024 mostly-empty tasks (dedup_incremental_bloom
-      // warm: 2.6 s wide-initials-only vs 0.7 s with this — the cached
-      // history index is tiny but was pinned at the initial width).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // let AQE convert a sort-merge join to broadcast-hash when the
-      // RUNTIME build side lands under 64 MB (the default 10 MB left
-      // q5_volume's 12.5 MB ASIA-orders side sorting 6M lineitem rows
-      // at sf1 - join stage 21.8 -> 3.0 CPU-s with the bump, r16).
-      // Runtime sizes are trustworthy where static estimates are not,
-      // so ONLY the adaptive threshold moves; the static 10 MB default
-      // stays (it guards against estimate-driven giant broadcasts).
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     if (knnSkewMode) {
       val hot = args.lift(1).map(_.toInt).getOrElse(30000)

@@ -2,12 +2,26 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only: print schemas of every test table (reader sanity check). */
-object Smoke {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
+/** The one session config every graft main runs under.
+  *
+  * `local[n]` with n = `SPARK_GRAFT_CPUS` (default: this machine's
+  * available processors), mirrored into `spark.sql.shuffle.partitions`
+  * when it is a number (`*` is a valid local master but not a
+  * partition count). Specs keep their own smaller config
+  * (`SparkSpec`), because they pin plan shapes under it.
+  */
+object Session {
+
+  /** Build (or return the running) session, set Spark's log level, and
+    * apply `overrides` last (RunQ's `SPARK_GRAFT_CONF` A/B probes).
+    */
+  def start(logLevel: String = "WARN",
+      overrides: Seq[(String, String)] = Nil): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val builder0 = SparkSession.builder().master(s"local[$cpus]")
+    val builder = cpus.toIntOption.fold(builder0)(n =>
+      builder0.config("spark.sql.shuffle.partitions", n))
       .config("spark.sql.session.timeZone", "UTC")
       // typed-Aggregator plans (TopKAgg and friends) fall back to
       // SORT-BASED aggregation past 128 distinct keys per task by
@@ -37,17 +51,14 @@ object Smoke {
       // so ONLY the adaptive threshold moves; the static 10 MB default
       // stays (it guards against estimate-driven giant broadcasts).
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
+      // `events.ts` is TIMESTAMP(NANOS) parquet, which Spark reads
+      // only under this flag, as raw longs ([[Tables.events]] converts
+      // them, and sets the flag itself for sessions built elsewhere)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+    val spark = overrides.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    for (n <- Tables.names) {
-      try {
-        val df = Tables.load(spark, dir, n)
-        println(s"== $n: ${df.schema.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")}")
-        if (n == "events" || n == "embeddings") df.show(3, 60)
-      } catch { case e: Throwable => println(s"== $n FAILED: ${e.getMessage.take(300)}") }
-    }
-    spark.stop()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
   }
 }

@@ -174,16 +174,9 @@ object IngestMain {
 
   def main(args: Array[String]): Unit = {
     validateArgs(stripFlags(args)) // fail usage errors before Spark startup
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // the reference's --debug (logging.DEBUG vs INFO): raise Spark's
     // level to INFO (Spark DEBUG is executor-internals flood)
-    spark.sparkContext.setLogLevel(
+    val spark = graft.Session.start(
       if (args.contains(DebugFlag)) "INFO" else "WARN")
     try run(spark, args,
       stagingDir = sys.env.getOrElse("GRAFT_STAGING_DIR", "/tmp/graft_staging"),

@@ -3,7 +3,6 @@ package graft.chess
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Hot-player ingest probe (SURVEY §8): runs the FULL ingest pipeline
   * (split-planned PGN parse → running stats → role doubling → the
@@ -36,17 +35,10 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val nGames = args.headOption.map(_.toInt).getOrElse(1000000)
     val months = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nFiles = 32
     val src = SamplePgn.ensureWrittenSkewed(
       nFiles = nFiles, gamesPerFile = nGames / nFiles, months = months)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.start()
 
     for (bucketed <- Seq(false, true, false, true)) { // 2 passes: JIT warm second pair
       val out = java.nio.file.Files.createTempDirectory("skew_ingest")
@@ -62,15 +54,9 @@ object SkewProbe {
       } finally {
         val wall = (System.nanoTime() - t0) / 1e9
         // drain the async listener bus before reading
-        var waited = 0
-        var last = -1
-        while (waited < 10000 &&
-            listener.synchronized(listener.byStage.values.map(_.size).sum) != last) {
-          last = listener.synchronized(listener.byStage.values.map(_.size).sum)
-          Thread.sleep(500); waited += 500
-        }
+        org.apache.spark.sql.GraftSqlShim.flushListeners(spark)
         spark.sparkContext.removeSparkListener(listener)
-        val worst = listener.byStage.toSeq
+        val worst = listener.synchronized(listener.byStage.toSeq)
           .map { case (sid, ts) =>
             val s = ts.sorted
             (sid, s.last, s(s.size / 2), s.size)

@@ -1,12 +1,21 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection, UnknownPartitioning}
+import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.storage.StorageLevel
 
 /** The one compilation unit that lives in Spark's package namespace, to
-  * reach two `private[sql]` seams the public API does not expose. Kept
+  * reach the `private[sql]` seams the public API does not expose. Kept
   * deliberately tiny: everything above it goes through
-  * [[graft.Lineage]].
+  * [[graft.Lineage]] or [[graft.functions]].
+  *
+  * [[column]]/[[expression]] bridge graft's native Catalyst
+  * expressions: Spark 4 made the direct constructors `private[sql]`
+  * (Columns wrap ColumnNodes, not Expressions), so the supported
+  * internal converter is reached from here — the same technique
+  * extension libraries (frameless, sedona, ...) use.
   *
   * Why it exists: `Dataset.localCheckpoint` truncates BOTH the plan
   * lineage (good — iterative loops like connected components and BPE
@@ -25,6 +34,9 @@ import org.apache.spark.storage.StorageLevel
   * recompute instead of failure.
   */
 object GraftSqlShim {
+
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Plan-lineage-only checkpoint: persist + materialize the frame's
     * internal RDD (rows copied first — Tungsten reuses `UnsafeRow`
@@ -59,25 +71,50 @@ object GraftSqlShim {
     * trustworthy, static estimates are not — so a cut frame reports
     * the default (effectively infinite) size and every join strategy
     * decision over it stays with AQE's measured exchange sizes.
+    *
+    * Eager (`eager = true`) materializes now and returns the row count
+    * that materialization computes anyway — iterative operators size
+    * their loop width from it ([[graft.Lineage.loopWidth]]) without
+    * paying a second count job. Lazy (`eager = false`) skips that
+    * count: the returned frame's first consumer job computes (and
+    * thereby persists) the blocks instead. For a loop whose every
+    * round already runs an action over the new cut (BPE's pair-count
+    * argmax reads the rewritten vocabulary immediately), the eager
+    * count is a whole redundant job per round — half the loop's job
+    * latency. Because nothing has executed, no finalized AQE
+    * partitioning exists to read, so a lazy frame claims
+    * UnknownPartitioning (the callers are narrow rewrite loops with no
+    * keyed consumer), reports a count of -1, and the CALLER must not
+    * unpersist the previous round's blocks until the next round's
+    * first action has run (the blocks are the lazy frame's recompute
+    * source).
     */
-  def persistCut(df: DataFrame): DataFrame = persistCutCounted(df)._1
-
-  /** [[persistCut]] that also surfaces the row count its eager
-    * materialization already computes — iterative operators size their
-    * loop width from it ([[graft.Lineage.loopWidth]]) without paying a
-    * second count job.
-    */
-  def persistCutCounted(df: DataFrame): (DataFrame, Long) = {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression, SortOrder}
-    import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
+  def persistCut(df: DataFrame, eager: Boolean): (DataFrame, Long) = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     val ds = df.asInstanceOf[classic.Dataset[_]]
     val rdd = df.queryExecution.toRdd
       .map((r: InternalRow) => r.copy())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cnt = rdd.count() // eager, like localCheckpoint(eager = true) — and
-                // for an adaptive plan this finalizes every query stage,
-                // so the partitioning read below is the FINAL one
+    val cnt = if (eager) rdd.count() else -1L // eager, like
+                // localCheckpoint(eager = true) — and for an adaptive
+                // plan this finalizes every query stage, so the
+                // partitioning read below is the FINAL one
+    val lr = execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
+    val part =
+      if (eager) finalPartitioning(df, lr)
+      else UnknownPartitioning(0)
+    // rebuild WITHOUT the estimated stats (None → computeStats falls
+    // back to defaultSizeInBytes, the pre-r16 static-planner behavior)
+    (classic.Dataset.ofRows(spark,
+      execution.LogicalRDD(lr.output, lr.rdd, part, Nil,
+        lr.isStreaming, None)(spark, None, Some(lr.constraints))), cnt)
+  }
+
+  /** The partitioning an eager cut frame claims, read once `df` has
+    * executed.
+    */
+  private def finalPartitioning(df: DataFrame, lr: execution.LogicalRDD)
+      : Partitioning = {
     // fromDataset supplies the constraint machinery; partitioning and
     // ordering are read from the final physical root OURSELVES because
     // AdaptiveSparkPlanExec (a LeafExecNode wrapper) reports
@@ -85,7 +122,6 @@ object GraftSqlShim {
     // the preservation would silently never fire on AQE plans (i.e.
     // on every production cut; measured: the LineageSpec pin fails on
     // the unwrapped-less form)
-    val lr = execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
     val physical = df.queryExecution.executedPlan match {
       case a: execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case p => p
@@ -123,50 +159,12 @@ object GraftSqlShim {
     // aggregation-consumer exchange elision (LineageSpec pin) only
     // needs the plain hash form, which is what a user-keyed
     // `repartition(n, k)` root (never AQE-coalesced) produces.
-    val part = firstLeaf(physical.outputPartitioning) match {
-      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-          if aligned =>
-        rw(h).asInstanceOf[Partitioning]
-      case e: Expression =>
-        org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(
-          rdd.getNumPartitions)
-      case _ if !aligned =>
-        org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(
-          rdd.getNumPartitions)
+    firstLeaf(physical.outputPartitioning) match {
+      case h: HashPartitioning if aligned => rw(h).asInstanceOf[Partitioning]
+      case _: Expression => UnknownPartitioning(lr.rdd.getNumPartitions)
+      case _ if !aligned => UnknownPartitioning(lr.rdd.getNumPartitions)
       case o => o
     }
-    val ordering: Seq[SortOrder] = Nil
-    // rebuild WITHOUT the estimated stats (None → computeStats falls
-    // back to defaultSizeInBytes, the pre-r16 static-planner behavior)
-    (classic.Dataset.ofRows(spark,
-      execution.LogicalRDD(lr.output, lr.rdd, part, ordering,
-        lr.isStreaming, None)(spark, None, Some(lr.constraints))), cnt)
-  }
-
-  /** [[persistCut]] WITHOUT the eager materializing count: the
-    * returned frame's first consumer job computes (and thereby
-    * persists) the blocks instead. For a loop whose every round
-    * already runs an action over the new cut (BPE's pair-count argmax
-    * reads the rewritten vocabulary immediately), the eager count is a
-    * whole redundant job per round — half the loop's job latency.
-    * Because nothing has executed, no finalized AQE partitioning
-    * exists to read, so the frame claims UnknownPartitioning (the
-    * callers are narrow rewrite loops with no keyed consumer); and the
-    * CALLER must not unpersist the previous round's blocks until the
-    * next round's first action has run (the blocks are the lazy
-    * frame's recompute source).
-    */
-  def persistCutLazy(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    val rdd = df.queryExecution.toRdd
-      .map((r: InternalRow) => r.copy())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val lr = execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    classic.Dataset.ofRows(spark,
-      execution.LogicalRDD(lr.output, lr.rdd,
-        org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(0),
-        Nil, lr.isStreaming, None)(spark, None, Some(lr.constraints)))
   }
 
   /** The session's AQE advisory partition size (`SQLConf` is
@@ -186,8 +184,8 @@ object GraftSqlShim {
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
 
-  /** Drain the listener bus — stage-metric listeners (RunQ's shuffle
-    * totals) receive events asynchronously, so a reader must flush
+  /** Drain the listener bus — stage-metric listeners (RunQ's stage
+    * table) receive events asynchronously, so a reader must flush
     * before totalling. `listenerBus` is `private[spark]`.
     */
   def flushListeners(spark: SparkSession): Unit =

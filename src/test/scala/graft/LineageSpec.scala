@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** [[Lineage.cut]] — the plan-lineage cut both modes of which every
@@ -97,6 +98,38 @@ class LineageSpec extends SparkSpec {
       assert(wrote > 0, "reliable mode wrote no checkpoint files")
     } finally {
       spark.conf.unset(Lineage.ConfKey)
+      LocalFs.deleteRecursively(java.nio.file.Paths.get(dir))
+    }
+  }
+
+  test("every cut mode, with and without graft.checkpoint.dir, keeps the rows and re-reads after free") {
+    val input = (1 to 100).toDF("n").withColumn("sq", col("n") * col("n"))
+      .repartition(3, col("n"))
+    val expected = input.collect().toSeq.sortBy(_.getInt(0))
+    // (mode, cut returning the frame and counted mode's count,
+    // recomputable without a checkpoint dir)
+    val modes: Seq[(String, DataFrame => (DataFrame, Option[Long]), Boolean)] = Seq(
+      ("eager", df => (Lineage.cut(df), None), true),
+      ("counted", df => { val (c, n) = Lineage.cutCounted(df); (c, Some(n)) }, true),
+      ("lazy", df => (Lineage.cutLazy(df), None), true),
+      // a localCheckpoint: its blocks are the only copy of the data
+      ("hard", df => (Lineage.cutHard(df), None), false))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_modes").toString
+    try for (ckpt <- Seq(None, Some(dir)); (mode, cutWith, recomputable) <- modes) {
+      ckpt.fold(spark.conf.unset(Lineage.ConfKey))(spark.conf.set(Lineage.ConfKey, _))
+      val clue = s"$mode cut, checkpoint dir ${ckpt.getOrElse("unset")}"
+      val (cut, count) = cutWith(input)
+      def rows = cut.collect().toSeq.sortBy(_.getInt(0))
+      assert(rows === expected, clue)
+      count.foreach(n => assert(n === expected.size.toLong, clue))
+      // reliable mode re-reads its checkpoint files in every mode
+      if (recomputable || ckpt.nonEmpty) {
+        Lineage.free(cut)
+        assert(rows === expected, s"$clue, after free")
+      }
+    } finally {
+      spark.conf.unset(Lineage.ConfKey)
+      Caches.sweep(spark)
       LocalFs.deleteRecursively(java.nio.file.Paths.get(dir))
     }
   }
