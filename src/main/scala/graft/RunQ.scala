@@ -1,61 +1,46 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.GraftSqlShim
 
 /** Dev-only: run named queries from SparkEntry against a sf dir.
   * Usage: runMain graft.RunQ <sfDir> name1 name2 ...  ("explain" flag
-  * via SPARK_GRAFT_EXPLAIN=1, per-query shuffle totals via
-  * SPARK_GRAFT_METRICS=1 — the instrument behind SURVEY §8's
+  * via SPARK_GRAFT_EXPLAIN=1; per-stage table plus per-query shuffle
+  * totals via SPARK_GRAFT_STAGES=1 — the instrument behind SURVEY §8's
   * shuffle-bytes before/after records)
   */
 object RunQ {
 
-  /** Per-STAGE resource table (SPARK_GRAFT_STAGES=1): one row per
-    * completed stage — tasks, wall/CPU seconds, shuffle read/write,
-    * records, spill. Its shuffle columns also give the per-query
-    * totals of SPARK_GRAFT_METRICS=1. The r14 attribution instrument: a per-query CPU
-    * total says a query got slower; this says WHICH exchange boundary
-    * carries the growth across scale tiers (run the same query at
-    * sf10 and sf100, diff the tables stage-by-stage).
+  /** The [[Trace]] stage table (SPARK_GRAFT_STAGES=1): one row per
+    * stage — tasks, run/CPU seconds, shuffle read/write, records,
+    * spill — then the query's shuffle totals. The r14 attribution
+    * instrument: a per-query CPU total says a query got slower; this
+    * says WHICH exchange boundary carries the growth across scale tiers
+    * (run the same query at sf10 and sf100, diff the tables
+    * stage-by-stage).
     */
-  private class StageTable extends SparkListener {
-    case class StageRow(id: Int, name: String, tasks: Int, wallMs: Long,
-      cpuMs: Long, srMB: Double, srRecs: Long, swMB: Double, swRecs: Long,
-      spillMB: Double, inMB: Double, outRecs: Long)
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
-    override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
-      val i = st.stageInfo
-      val m = i.taskMetrics
-      if (m != null) rows.add(StageRow(i.stageId,
-        i.name.takeWhile(_ != '\n').take(70), i.numTasks,
-        m.executorRunTime, m.executorCpuTime / 1000000L,
-        m.shuffleReadMetrics.totalBytesRead / 1048576.0,
-        m.shuffleReadMetrics.recordsRead,
-        m.shuffleWriteMetrics.bytesWritten / 1048576.0,
-        m.shuffleWriteMetrics.recordsWritten,
-        (m.memoryBytesSpilled + m.diskBytesSpilled) / 1048576.0,
-        m.inputMetrics.bytesRead / 1048576.0, m.outputMetrics.recordsWritten))
+  private def dumpStages(tag: String, rs: Seq[Trace.Stage]): Unit = {
+    def mb(b: Long) = b / 1048576.0
+    println(f"[runq] $tag stages (${rs.size}):")
+    println("[runq]   id tasks  wall_s   cpu_s  sread_MB srecs swrite_MB wrecs spill_MB input_MB  name")
+    rs.foreach { r =>
+      val (m, sr, sw) = (r.metrics, r.metrics.shuffleReadMetrics, r.metrics.shuffleWriteMetrics)
+      println(f"[runq]   ${r.id}%4d ${r.tasks}%4d ${m.executorRunTime / 1000.0}%8.1f " +
+        f"${m.executorCpuTime / 1e9}%8.1f ${mb(sr.totalBytesRead)}%8.1f ${sr.recordsRead}%9d " +
+        f"${mb(sw.bytesWritten)}%8.1f ${sw.recordsWritten}%9d ${mb(r.spillBytes)}%8.1f " +
+        f"${mb(m.inputMetrics.bytesRead)}%8.1f  ${r.name.take(70)}")
     }
-    def dump(tag: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      val rs = rows.asScala.toSeq.sortBy(_.id)
-      println(f"[runq] $tag stages (${rs.size}):")
-      println("[runq]   id tasks  wall_s   cpu_s  sread_MB srecs swrite_MB wrecs spill_MB input_MB  name")
-      rs.foreach { r =>
-        println(f"[runq]   ${r.id}%4d ${r.tasks}%4d ${r.wallMs / 1000.0}%8.1f " +
-          f"${r.cpuMs / 1000.0}%8.1f ${r.srMB}%8.1f ${r.srRecs}%9d ${r.swMB}%8.1f " +
-          f"${r.swRecs}%9d ${r.spillMB}%8.1f ${r.inMB}%8.1f  ${r.name}")
-      }
-    }
-    /** (shuffle MiB written, shuffle MiB read) over the rows so far. */
-    def shuffleMB: (Double, Double) = {
-      import scala.jdk.CollectionConverters._
-      val rs = rows.asScala
-      (rs.map(_.swMB).sum, rs.map(_.srMB).sum)
-    }
-    def reset(): Unit = rows.clear()
+    val written = rs.map(_.metrics.shuffleWriteMetrics.bytesWritten).sum
+    val read = rs.map(_.metrics.shuffleReadMetrics.totalBytesRead).sum
+    println(f"[runq] $tag shuffle: write ${mb(written)}%.1f MiB, read ${mb(read)}%.1f MiB")
   }
 
   def main(args: Array[String]): Unit = {
+    val unknown = args.drop(1).filterNot(SparkEntry.queries.contains)
+    if (args.length < 2 || unknown.nonEmpty) {
+      System.err.println(unknown.map(n => s"[runq] unknown query: $n\n").mkString +
+        "usage: runMain graft.RunQ <sfDir> <query> [query ...]\nqueries: " +
+        SparkEntry.queries.keys.toSeq.sorted.mkString(" "))
+      sys.exit(2)
+    }
     val sfDir = args.head
     // dev knob: arbitrary conf overrides "k=v;k=v" for A/B plan probes
     // (the instrument behind §8's AQE-partition-sizing measurements).
@@ -65,11 +50,7 @@ object RunQ {
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
     val spark = Session.start(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "ERROR"), extra)
-    val metrics = sys.env.contains("SPARK_GRAFT_METRICS")
-    val dumpStages = sys.env.contains("SPARK_GRAFT_STAGES")
-    val stages = if (metrics || dumpStages) {
-      val t = new StageTable; spark.sparkContext.addSparkListener(t); Some(t)
-    } else None
+    val stages = sys.env.contains("SPARK_GRAFT_STAGES")
     val planMetrics = sys.env.contains("SPARK_GRAFT_PLANMETRICS")
     // per-query sum of a named SQL metric over the query's executions
     // (substring match, e.g. "sort fallback", "spill size") — the
@@ -78,7 +59,7 @@ object RunQ {
     var lastExecId = -1L
     for (name <- args.tail) {
       val t0 = System.nanoTime()
-      stages.foreach(_.reset())
+      val trace = if (stages) Some(Trace.start(spark)) else None
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) df.explain("formatted")
@@ -86,12 +67,6 @@ object RunQ {
         // (count() would let Catalyst prune the expensive projections).
         df.write.format("noop").mode("overwrite").save()
         println(f"[runq] $name: materialized in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        if (metrics) stages.foreach { t =>
-          // listener events drain asynchronously; flush before reading
-          org.apache.spark.sql.GraftSqlShim.flushListeners(spark)
-          val (written, read) = t.shuffleMB
-          println(f"[runq] $name shuffle: write $written%.1f MiB, read $read%.1f MiB")
-        }
         if (sys.env.contains("SPARK_GRAFT_SHOW")) df.show(5, 80)
       } catch { case scala.util.control.NonFatal(e) =>
         println(s"[runq] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
@@ -101,29 +76,27 @@ object RunQ {
       } finally {
         // read (and ADVANCE past) this query's SQL executions in the
         // finally block: a FAILed query's executions must not leak into
-        // the next query's sqlmetric window (r13 review finding)
-        // plan metrics read the window WITHOUT advancing it (sqlMetric
-        // may want the same window); the watermark advances once, after
-        // both readers, to the max exec id either saw
-        // the reads are status-store queries that can themselves throw;
-        // an exception HERE would replace the query's own failure and
+        // the next query's sqlmetric window (r13 review finding). One
+        // read serves both instruments, so the watermark advances once.
+        // The read is a status-store query that can itself throw; an
+        // exception HERE would replace the query's own failure and
         // abort the remaining loop — instruments log and continue
         // (ADVICE r14)
-        var windowEnd = lastExecId
-        try {
+        try if (planMetrics || sqlMetric.isDefined) {
+          GraftSqlShim.flushListeners(spark)
+          val (maxId, nodes) = GraftSqlShim.planMetricsSince(spark, lastExecId)
+          lastExecId = maxId
           if (planMetrics) {
-            org.apache.spark.sql.GraftSqlShim.flushListeners(spark)
-            val (maxId, lines) = org.apache.spark.sql.GraftSqlShim
-              .planMetricLinesSince(spark, lastExecId)
-            windowEnd = math.max(windowEnd, maxId)
-            println(s"[runq] $name plan metrics (${lines.size} nodes):")
-            lines.foreach(l => println(s"[runq]   $l"))
+            println(s"[runq] $name plan metrics (${nodes.size} nodes):")
+            nodes.foreach { n =>
+              val ms = n.metrics.map { case (k, v) => s"$k=$v" }
+              println(s"[runq]   exec ${n.execId} ${n.node}: ${ms.mkString(" | ")}")
+            }
           }
           sqlMetric.foreach { m =>
-            org.apache.spark.sql.GraftSqlShim.flushListeners(spark)
-            val (maxId, v) = org.apache.spark.sql.GraftSqlShim
-              .sqlMetricSince(spark, lastExecId, m)
-            windowEnd = math.max(windowEnd, maxId)
+            val v = nodes.flatMap(_.metrics).collect {
+              case (k, v) if k.contains(m) => GraftSqlShim.metricValue(v)
+            }.sum
             println(s"""[runq] $name sqlmetric "$m": $v""")
           }
         } catch { case scala.util.control.NonFatal(e) =>
@@ -134,11 +107,8 @@ object RunQ {
           println(s"[runq] $name instrument read failed: " +
             s"${e.getClass.getName}: ${e.getMessage}")
         }
-        lastExecId = windowEnd
-        try if (dumpStages) stages.foreach { t =>
-          org.apache.spark.sql.GraftSqlShim.flushListeners(spark)
-          t.dump(name)
-        } catch { case scala.util.control.NonFatal(e) =>
+        try trace.foreach(t => dumpStages(name, t.stop()))
+        catch { case scala.util.control.NonFatal(e) =>
           println(s"[runq] $name stage dump failed: " +
             s"${e.getClass.getName}: ${e.getMessage}")
         }

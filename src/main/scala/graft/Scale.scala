@@ -30,49 +30,32 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
-  /** Task stats for everything run in `body`: (max task ms, median
-    * task ms, detail line for the max task's STAGE). The global
-    * max/median mixes stages of very different task weights (a 32-way
-    * input scan vs hundreds of tiny exchange tasks), so the detail
+  /** The straggler line for everything run in `body`: (global max /
+    * median task ms and their ratio, detail for the max task's STAGE).
+    * The global max/median mixes stages of very different task weights
+    * (a 32-way input scan vs hundreds of tiny exchange tasks), so the detail
     * line localizes the max task — stage id, that stage's own
     * max/median/task-count, and the stage name (scan / exchange /
     * result) — which is what distinguishes "heaviest stage is the
     * splittable input scan" from "one key serialized into one task".
+    * The stage NAME (its callsite line) also distinguishes "max task is
+    * a broadcast-relation build job" ($anonfun$withThreadLocalCaptured,
+    * a bounded model-sized collect) from "one key serialized into one
+    * exchange task" — the two readings of a 1-task max stage.
     */
   private def withTaskStats(spark: SparkSession)(body: => Unit)
-      : (Long, Long, String) = {
-    val times = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    val names = scala.collection.mutable.Map.empty[Int, String]
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        times.synchronized { times += ((t.stageId, t.taskInfo.duration)) }
-      // the stage NAME (its callsite line) distinguishes "max task is
-      // a broadcast-relation build job" ($anonfun$withThreadLocalCaptured,
-      // a bounded model-sized collect) from "one key serialized into
-      // one exchange task" — the two readings of a 1-task max stage
-      override def onStageSubmitted(
-          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        names.synchronized {
-          names(s.stageInfo.stageId) = s.stageInfo.name.takeWhile(_ != '\n')
-        }
+      : (String, String) = {
+    val stages = Trace.during(spark)(body).filter(_.tasks > 0)
+    val sorted = stages.flatMap(_.taskMs).sorted
+    val (maxT, medT) = if (sorted.isEmpty) (0L, 0L) else (sorted.last, sorted(sorted.size / 2))
+    val ratio = if (medT > 0) maxT.toDouble / medT else 0.0
+    val detail = if (stages.isEmpty) "no tasks" else {
+      val worst = stages.maxBy(_.taskMs.max)
+      val stage = worst.taskMs.sorted
+      f"max task's stage: ${worst.id} [${worst.name}] (${stage.size} tasks, " +
+        f"stage median ${stage(stage.size / 2)}ms, stage max ${stage.last}ms)"
     }
-    spark.sparkContext.addSparkListener(l)
-    try body finally {
-      org.apache.spark.sql.GraftSqlShim.flushListeners(spark)
-      spark.sparkContext.removeSparkListener(l)
-    }
-    val all = times.synchronized(times.toSeq)
-    if (all.isEmpty) (0L, 0L, "no tasks")
-    else {
-      val sorted = all.map(_._2).sorted
-      val (maxStage, maxT) = all.maxBy(_._2)
-      val stage = all.filter(_._1 == maxStage).map(_._2).sorted
-      val nm = names.synchronized(names.getOrElse(maxStage, "?"))
-      val detail = f"max task's stage: $maxStage [$nm] (${stage.size} tasks, " +
-        f"stage median ${stage(stage.size / 2)}ms, stage max ${maxT}ms)"
-      (sorted.last, sorted(sorted.size / 2), detail)
-    }
+    (f"straggler max/median ${maxT}ms/${medT}ms = $ratio%.1fx", detail)
   }
 
   private def viralCorpus(spark: SparkSession, copies: Int): String = {
@@ -167,16 +150,13 @@ object Scale {
     def run(tag: String, hotSalt: Int): Unit = {
       val t0 = System.nanoTime()
       var plan = ""
-      val (maxT, medT, detail) = withTaskStats(spark) {
+      val (straggler, detail) = withTaskStats(spark) {
         val df = graft.ops.Similarity.knnGraph(spark, dir, hotSalt = hotSalt)
         df.write.format("noop").mode("overwrite").save()
         plan = df.queryExecution.executedPlan.toString
       }
-      val ratio = if (medT > 0) maxT.toDouble / medT else 0.0
-      System.err.println(f"[scale] knn_graph[$tag] " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1fs straggler max/median " +
-        f"${maxT}ms/${medT}ms = $ratio%.1fx; " +
-        s"aqeSkewEngaged=${plan.contains("skewed=true")}; $detail")
+      System.err.println(f"[scale] knn_graph[$tag] ${(System.nanoTime() - t0) / 1e9}%.1fs " +
+        s"$straggler; aqeSkewEngaged=${plan.contains("skewed=true")}; $detail")
       Caches.sweep(spark)
     }
     run("plain, default AQE", hotSalt = 1)
@@ -276,13 +256,11 @@ object Scale {
           "text_dup_spans", "text_perplexity")
     for (name <- names) {
       val t0 = System.nanoTime()
-      val (maxT, medT, detail) = withTaskStats(spark) {
+      val (straggler, detail) = withTaskStats(spark) {
         SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
       }
-      val ratio = if (medT > 0) maxT.toDouble / medT else 0.0
-      System.err.println(f"[scale] $name ${(System.nanoTime() - t0) / 1e9}%.1fs" +
-        f" straggler max/median ${maxT}ms/${medT}ms = $ratio%.1fx; $detail")
+      System.err.println(f"[scale] $name ${(System.nanoTime() - t0) / 1e9}%.1fs $straggler; $detail")
       Caches.sweep(spark) // each probe measures ITS cost, not leftovers
     }
 

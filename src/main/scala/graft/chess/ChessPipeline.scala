@@ -164,88 +164,6 @@ object ChessPipeline {
     }
   }
 
-  /** The direct running-stats formulation: one window partition per
-    * player (and per (player, Event)). One shuffle, but a hot key (a
-    * bot with 1e7 games) is one task — use [[runningStatsBucketed]]
-    * when the player distribution is heavy-tailed.
-    */
-  private def runningStatsPlain(long: DataFrame): DataFrame = {
-    val ord = Seq(col("DateTime"), col("ID"))
-    val byName = Window.partitionBy("name").orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val byNameType = Window.partitionBy("name", "Event").orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    long.select(col("ID"), col("role"), col("name"), col("Event"),
-      count(lit(1)).over(byName).as("run_total"),
-      count(lit(1)).over(byNameType).as("run_type"),
-      // running max of own Elo within event type; 0 before any known
-      // Elo (ingester.py:188 initializes the accumulator to 0)
-      coalesce(max(col("elo")).over(byNameType), lit(0)).as("run_max"))
-  }
-
-  /** Skew-resistant two-phase running stats, same answer as
-    * [[runningStatsPlain]] row-for-row: windows run per (name, MONTH)
-    * — so the hottest task is one player-month, not one player-ever —
-    * and a second, tiny window over each player's per-month aggregates
-    * (#months rows per player, no skew possible) produces the
-    * carry-in offsets: prior-month game counts are added to the local
-    * running count, prior-month maxima folded into the local running
-    * max. Correct because month(DateTime) is monotone in the
-    * (DateTime, ID) order the counters follow (null DateTimes sort
-    * first and share the null bucket; greatest() ignores nulls).
-    */
-  private def runningStatsBucketed(long: DataFrame): DataFrame = {
-    // null DateTimes get a sentinel month that sorts before any real
-    // data (they sort first in the plain order too) — a NULL bucket
-    // would silently drop its rows at the equi-joins below
-    val withBkt = long.withColumn("bkt",
-      coalesce(date_trunc("month", col("DateTime")),
-        to_timestamp(lit("0001-01-01"))))
-    val ord = Seq(col("DateTime"), col("ID"))
-    val localTotalW = Window.partitionBy("name", "bkt").orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val localTypeW = Window.partitionBy("name", "Event", "bkt").orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = withBkt.select(col("ID"), col("role"), col("name"),
-      col("Event"), col("bkt"),
-      count(lit(1)).over(localTotalW).as("loc_total"),
-      count(lit(1)).over(localTypeW).as("loc_type"),
-      max(col("elo")).over(localTypeW).as("loc_max"))
-    // per-bucket aggregates, then exclusive-preceding offsets over the
-    // (tiny) per-player month sequence
-    val prevBkts = Window.partitionBy("name").orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offTotal = withBkt.groupBy("name", "bkt")
-      .agg(count(lit(1)).as("bkt_n"))
-      .select(col("name"), col("bkt"),
-        coalesce(sum(col("bkt_n")).over(prevBkts), lit(0L)).as("off_total"))
-    val prevTypeBkts = Window.partitionBy("name", "Event").orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offType = withBkt.groupBy("name", "Event", "bkt")
-      .agg(count(lit(1)).as("bkt_n"), max(col("elo")).as("bkt_max"))
-      .select(col("name"), col("Event"), col("bkt"),
-        coalesce(sum(col("bkt_n")).over(prevTypeBkts), lit(0L)).as("off_type"),
-        max(col("bkt_max")).over(prevTypeBkts).as("off_max"))
-    // null-safe (<=>) key matching: name is null when the White/Black
-    // tag is missing, Event when it was '?'. The window formulation
-    // keeps null partition keys as their own group, so the offset
-    // joins must match them too — plain === would silently drop every
-    // such row (each null group aggregates to exactly one offset row,
-    // so <=> stays a 1:1 equi-join and hash-joins normally). bkt is
-    // never null (sentinel above).
-    local.as("l")
-      .join(offTotal.as("ot"),
-        col("l.name") <=> col("ot.name") && col("l.bkt") === col("ot.bkt"))
-      .join(offType.as("oy"),
-        col("l.name") <=> col("oy.name") && col("l.Event") <=> col("oy.Event") &&
-          col("l.bkt") === col("oy.bkt"))
-      .select(col("l.ID").as("ID"), col("l.role").as("role"),
-        col("l.name").as("name"), col("l.Event").as("Event"),
-        (col("loc_total") + col("off_total")).as("run_total"),
-        (col("loc_type") + col("off_type")).as("run_type"),
-        coalesce(greatest(col("loc_max"), col("off_max")), lit(0)).as("run_max"))
-  }
-
   /** Adds the running per-player statistics (ingester.py:172-218):
     * cumulative game counts (total + per event type) and running max
     * Elo, per role. Long-form explode → windows over (name[, Event])
@@ -256,19 +174,27 @@ object ChessPipeline {
     * numbers as one job over the full range — the reference's
     * cumulative-file carry-over, minus the single-threaded dict.
     *
-    * `bucketed = true` selects the skew-resistant two-phase window
-    * formulation ([[runningStatsBucketed]]) — identical output,
-    * bounded task size under hot players.
+    * One window partition per player: a hot bot is one task, which at
+    * lichess-realistic skew stays cheap next to parse+sort (SURVEY §8).
     */
-  def withStats(games: DataFrame, prior: Option[DataFrame] = None,
-      bucketed: Boolean = false): DataFrame = {
+  def withStats(games: DataFrame, prior: Option[DataFrame] = None): DataFrame = {
     val long = games.select(col("ID"), col("DateTime"), col("Event"),
       explode(array(
         struct(lit("White").as("role"), col("White").as("name"), col("WhiteElo").as("elo")),
         struct(lit("Black").as("role"), col("Black").as("name"), col("BlackElo").as("elo")))).as("p"))
       .select(col("ID"), col("DateTime"), col("Event"),
         col("p.role"), col("p.name"), col("p.elo"))
-    val statsRaw = if (bucketed) runningStatsBucketed(long) else runningStatsPlain(long)
+    val ord = Seq(col("DateTime"), col("ID"))
+    val byName = Window.partitionBy("name").orderBy(ord: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val byNameType = Window.partitionBy("name", "Event").orderBy(ord: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val statsRaw = long.select(col("ID"), col("role"), col("name"), col("Event"),
+      count(lit(1)).over(byName).as("run_total"),
+      count(lit(1)).over(byNameType).as("run_type"),
+      // running max of own Elo within event type; 0 before any known
+      // Elo (ingester.py:188 initializes the accumulator to 0)
+      coalesce(max(col("elo")).over(byNameType), lit(0)).as("run_max"))
     val stats = prior match {
       case None =>
         statsRaw.select(col("ID"), col("role"),
@@ -283,7 +209,8 @@ object ChessPipeline {
         // every player ever seen — co-partitioned shuffle join on name,
         // AQE may still broadcast when it is actually small
         val perName = p.groupBy("name").agg(sum(col("n_games")).as("p_total"))
-        // null-safe joins for the same reason as the bucketed offsets:
+        // null-safe joins: the windows keep null partition keys (a
+        // missing White/Black tag, a '?' Event) as their own groups, so
         // prior state for the null-name / null-Event groups must still
         // offset this batch's null-keyed rows
         statsRaw.as("s")

@@ -72,10 +72,10 @@ object SamplePgn {
   /** A game for the SKEWED corpus ([[ensureWrittenSkewed]]): player
     * selection is lichess-realistic heavy-tailed — each side is a bot
     * account with probability `hotShare` (a handful of bots play a
-    * large share of ALL games on lichess; the documented skew case the
-    * two-phase running-stats formulation exists for), otherwise one of
+    * large share of ALL games on lichess; the documented straggler
+    * case for the per-player running-stats window), otherwise one of
     * `nTail` tail players. Dates stripe over `months` consecutive
-    * months so the bucketed window has real month boundaries.
+    * months so the monthly sink has real month boundaries.
     */
   private def gameSkewed(rng: scala.util.Random, idx: Int, months: Int,
       hotShare: Double, nBots: Int, nTail: Int): String = {
@@ -116,8 +116,9 @@ object SamplePgn {
     * `hotShare` of all seats are one of `nBots` bot accounts (so each
     * bot plays ~hotShare/nBots · 2 · games seats — at 1M games and the
     * defaults, ~10⁵ games per bot, the straggler shape), spread over
-    * `months` months. Idempotent per JVM temp dir like
-    * [[ensureWritten]]; the dir name encodes every dial.
+    * `months` months — the corpus of SkewSpec's full-ingest straggler
+    * check. Idempotent per JVM temp dir like [[ensureWritten]]; the dir
+    * name encodes every dial.
     */
   def ensureWrittenSkewed(nFiles: Int = 32, gamesPerFile: Int = 31250,
       months: Int = 3, hotShare: Double = 0.3, nBots: Int = 3,

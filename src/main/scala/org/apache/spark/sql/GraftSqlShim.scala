@@ -184,86 +184,74 @@ object GraftSqlShim {
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
 
-  /** Drain the listener bus — stage-metric listeners (RunQ's stage
-    * table) receive events asynchronously, so a reader must flush
-    * before totalling. `listenerBus` is `private[spark]`.
+  /** Drain the listener bus — listeners ([[graft.Trace]], the SQL
+    * status store) receive events asynchronously, so a reader must
+    * flush before totalling. `listenerBus` is `private[spark]`.
     */
   def flushListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Sum a named SQL metric across every plan node of every SQL
-    * execution whose id is > `sinceExecId`, returning (newest execution
-    * id seen, summed value). The SQL status store is `private[sql]`;
-    * this is the instrument behind RunQ's `SPARK_GRAFT_SQLMETRIC` —
+  /** One plan node's populated SQL metrics: (name, display value). */
+  final case class NodeMetrics(execId: Long, node: String,
+      metrics: Seq[(String, String)])
+
+  /** Every plan node with populated metrics, over the SQL executions
+    * whose id is > `sinceExecId`, and the newest execution id seen (the
+    * caller's next watermark). The SQL status store is `private[sql]`;
+    * this one read is the instrument behind RunQ's
+    * `SPARK_GRAFT_PLANMETRICS` (WHICH operator: the r14 residual
+    * attributions need per-node output-row counts) and
+    * `SPARK_GRAFT_SQLMETRIC` (how much in total, via [[metricValue]] —
     * e.g. "sort fallback" reads ObjectHashAggregate's "number of sort
     * fallback tasks" counter, turning a does-the-partial-agg-degrade
-    * hypothesis into a counter instead of a wall-clock inference.
-    *
-    * Values arrive display-formatted: plain SUM counters as "1,234";
-    * size metrics as "2.0 MiB (min, med, max)"; timing metrics as
-    * "1.5 m (...)". The leading total is parsed as a DECIMAL and
-    * NORMALIZED by its unit suffix — sizes to bytes, durations to ms —
-    * so sums never mix "2.0 MiB" as 2 with "512.0 KiB" as 512 (that
-    * unit-blind mix was a real r13 hazard, flagged in review). One
-    * nameSubstring targets one metric family, so the normalized sum is
-    * dimensionally consistent per call.
+    * hypothesis into a counter instead of a wall-clock inference).
+    * Nodes come from the final plan graph, so each accumulator counts
+    * once; the execution's flat metric list repeats it per AQE re-plan.
     */
-  def sqlMetricSince(spark: SparkSession, sinceExecId: Long,
-      nameSubstring: String): (Long, Long) = {
+  def planMetricsSince(spark: SparkSession, sinceExecId: Long)
+      : (Long, Seq[NodeMetrics]) = {
     val store = spark.asInstanceOf[classic.SparkSession].sharedState.statusStore
     val execs = store.executionsList().filter(_.executionId > sinceExecId)
-    // leading total: decimal number (comma-grouped) + optional unit token
-    val num = "(-?\\d[\\d,]*(?:\\.\\d+)?)\\s*([A-Za-z]+)?".r
-    val unitScale: Map[String, Double] = Map(
-      "B" -> 1d, "KiB" -> math.pow(2, 10), "MiB" -> math.pow(2, 20),
-      "GiB" -> math.pow(2, 30), "TiB" -> math.pow(2, 40),
-      "PiB" -> math.pow(2, 50), "EiB" -> math.pow(2, 60),
-      // Utils.msDurationToString suffixes, normalized to ms
-      "ms" -> 1d, "s" -> 1000d, "m" -> 60000d, "h" -> 3600000d)
-    val total = execs.map { e =>
-      val vals = store.executionMetrics(e.executionId)
-      e.metrics.filter(_.name.contains(nameSubstring))
-        .flatMap(m => vals.get(m.accumulatorId))
-        .flatMap(v => num.findFirstMatchIn(v))
-        .map { m =>
-          val raw = m.group(1).replace(",", "").toDouble
-          val scale = Option(m.group(2)).flatMap(unitScale.get).getOrElse(1d)
-          (raw * scale).toLong
-        }.sum
-    }.sum
-    val maxId = (sinceExecId +: execs.map(_.executionId)).max
-    (maxId, total)
-  }
-
-  /** Per-plan-node metric dump for every SQL execution newer than
-    * `sinceExecId`: one line per node that has populated metrics, in
-    * the display format ("node HashAggregate#12: output rows=1,234,
-    * spill size=2.0 MiB"). The instrument behind RunQ's
-    * `SPARK_GRAFT_PLANMETRICS` — where [[sqlMetricSince]] answers "how
-    * much total", this answers "WHICH operator": the r14 residual
-    * attributions (knn_graph candidate volume, bpe_encode growth) need
-    * per-node output-row counts, not a summed scalar.
-    */
-  def planMetricLinesSince(spark: SparkSession, sinceExecId: Long)
-      : (Long, Seq[String]) = {
-    val store = spark.asInstanceOf[classic.SparkSession].sharedState.statusStore
-    val execs = store.executionsList().filter(_.executionId > sinceExecId)
-    val lines = execs.flatMap { e =>
+    val nodes = execs.flatMap { e =>
       val vals = store.executionMetrics(e.executionId)
       store.planGraph(e.executionId).allNodes.flatMap { n =>
         // size/timing metrics render MULTILINE ("total (min, med, max)"
         // header, values on the next line) — flatten, or a line-based
         // log filter silently drops the values
         val ms = n.metrics.flatMap(m =>
-          vals.get(m.accumulatorId).map(v =>
-            s"${m.name}=${v.replace("\n", " ")}"))
+          vals.get(m.accumulatorId).map(v => m.name -> v.replace("\n", " ")))
         if (ms.isEmpty) None
-        else Some(s"exec ${e.executionId} ${n.name}#${n.id}: ${ms.mkString(" | ")}")
+        else Some(NodeMetrics(e.executionId, s"${n.name}#${n.id}", ms.toSeq))
       }
     }
-    val maxId = (sinceExecId +: execs.map(_.executionId)).max
-    (maxId, lines)
+    ((sinceExecId +: execs.map(_.executionId)).max, nodes)
   }
+
+  // leading total: decimal number (comma-grouped) + optional unit token
+  private val leadingTotal = "(-?\\d[\\d,]*(?:\\.\\d+)?)\\s*([A-Za-z]+)?".r
+  private val unitScale: Map[String, Double] = Map(
+    "B" -> 1d, "KiB" -> math.pow(2, 10), "MiB" -> math.pow(2, 20),
+    "GiB" -> math.pow(2, 30), "TiB" -> math.pow(2, 40),
+    "PiB" -> math.pow(2, 50), "EiB" -> math.pow(2, 60),
+    // Utils.msDurationToString suffixes, normalized to ms
+    "ms" -> 1d, "s" -> 1000d, "m" -> 60000d, "h" -> 3600000d)
+
+  /** A display-formatted metric value as a number. Plain SUM counters
+    * arrive as "1,234"; size metrics as "2.0 MiB (min, med, max)";
+    * timing metrics as "1.5 m (...)". The leading total is parsed as a
+    * DECIMAL and NORMALIZED by its unit suffix — sizes to bytes,
+    * durations to ms — so sums never mix "2.0 MiB" as 2 with
+    * "512.0 KiB" as 512 (that unit-blind mix was a real r13 hazard,
+    * flagged in review). One metric name targets one metric family, so
+    * a sum of these values is dimensionally consistent. 0 when the
+    * value holds no number.
+    */
+  def metricValue(display: String): Long =
+    leadingTotal.findFirstMatchIn(display).map { m =>
+      val raw = m.group(1).replace(",", "").toDouble
+      val scale = Option(m.group(2)).flatMap(unitScale.get).getOrElse(1d)
+      (raw * scale).toLong
+    }.getOrElse(0L)
 
   /** Whether `rdd`'s persisted blocks are a `localCheckpoint` — i.e.
     * the ONLY copy of the data (RDD lineage truncated): unpersisting

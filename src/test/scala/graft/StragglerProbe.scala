@@ -1,42 +1,17 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 /** Shared straggler instrumentation for the skew-probe specs
-  * ([[graft.ops.CollapseSkewSpec]], [[graft.ops.SamplingSkewSpec]]):
-  * collect per-task wall times for everything run in a block, and
-  * assert the max task stays within a bounded multiple of the median —
-  * the measurable signature that no single key serialized a viral
-  * group into one unsplittable task.
+  * ([[graft.ops.CollapseSkewSpec]], [[graft.ops.SamplingSkewSpec]],
+  * [[graft.ops.SkewSpec]]): collect per-task wall times for everything
+  * run in a block, and assert the max task stays within a bounded
+  * multiple of the median — the measurable signature that no single
+  * key serialized a viral group into one unsplittable task.
   */
 trait StragglerProbe { this: SparkSpec =>
 
-  private class TaskTimes extends SparkListener {
-    val times: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer[Long]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      synchronized { times += t.taskInfo.duration }
-  }
-
-  /** Task durations (ms) for every task launched while `body` runs.
-    * The listener bus is asynchronous — drain until the count is
-    * stable before detaching.
-    */
-  def taskTimes(body: => Unit): Seq[Long] = {
-    val l = new TaskTimes
-    spark.sparkContext.addSparkListener(l)
-    try body finally {
-      var waited = 0
-      var last = -1
-      while (waited < 10000 && l.synchronized(l.times.size) != last) {
-        last = l.synchronized(l.times.size)
-        Thread.sleep(500); waited += 500
-      }
-      spark.sparkContext.removeSparkListener(l)
-    }
-    l.times.toSeq
-  }
+  /** Task durations (ms) for every task launched while `body` runs. */
+  def taskTimes(body: => Unit): Seq[Long] =
+    Trace.during(spark)(body).flatMap(_.taskMs)
 
   /** Max task ≤ max(10× median, 5 s): the local-mode floor absorbs
     * JIT/coalesce artifacts; the counterfactual single-task sort of a

@@ -197,31 +197,24 @@ class ChessPipelineSpec extends SparkSpec {
     assert(nWindow <= 2, s"window stage duplicated ($nWindow nodes):\n$plan")
   }
 
-  test("bucketed (skew-resistant) withStats equals the plain formulation") {
-    val cols = ChessPipeline.withStats(games).columns.sorted.map(col)
-    val plain = ChessPipeline.withStats(games)
-      .select(cols: _*).orderBy("ID").collect().toSeq
-    val bucketed = ChessPipeline.withStats(games, bucketed = true)
-      .select(cols: _*).orderBy("ID").collect().toSeq
-    assert(bucketed === plain)
-  }
-
-  test("bucketed withStats equals plain under null Event and null player name") {
+  test("withStats keeps games with null Event and null player name") {
     // a missing White/Black tag -> null name; Event '?' -> null. The
-    // window formulation keeps null partition keys; the bucketed
-    // offset joins must too (null-safe keys), or these games vanish.
+    // windows keep null partition keys as their own groups, or these
+    // games would vanish.
     val g = games
       .withColumn("Event",
         when(col("ID") === "g1", lit(null).cast("string")).otherwise(col("Event")))
       .withColumn("White",
         when(col("ID") === "g4", lit(null).cast("string")).otherwise(col("White")))
-    val cols = ChessPipeline.withStats(g).columns.sorted.map(col)
-    val plain = ChessPipeline.withStats(g)
-      .select(cols: _*).orderBy("ID").collect().toSeq
-    val bucketed = ChessPipeline.withStats(g, bucketed = true)
-      .select(cols: _*).orderBy("ID").collect().toSeq
-    assert(plain.size === games.count())
-    assert(bucketed === plain)
+    assert(ChessPipeline.withStats(g).count() === games.count())
+  }
+
+  test("withStats keeps rows with null DateTime") {
+    // a malformed date parses to null and must not vanish
+    val g = games.limit(1).withColumn("DateTime",
+      lit(null).cast("timestamp"))
+      .unionByName(games)
+    assert(ChessPipeline.withStats(g).count() === games.count() + 1)
   }
 
   test("incremental ingestion carries prior state for null-keyed players") {
@@ -235,26 +228,14 @@ class ChessPipelineSpec extends SparkSpec {
     val b1 = g.filter(col("DateTime") < "2024-03-02")
     val b2 = g.filter(col("DateTime") >= "2024-03-02")
     val state1 = ChessPipeline.statsState(b1)
-    for (bucketed <- Seq(false, true)) {
-      val incremental = ChessPipeline.withStats(b1, bucketed = bucketed)
-        .unionByName(ChessPipeline.withStats(b2, Some(state1), bucketed = bucketed))
-      val full = ChessPipeline.withStats(g)
-      val cols = full.columns.sorted.map(col)
-      val a = incremental.select(cols: _*).orderBy("ID").collect().toSeq
-      val b = full.select(cols: _*).orderBy("ID").collect().toSeq
-      assert(a.size === games.count(), s"bucketed=$bucketed dropped rows")
-      assert(a === b, s"bucketed=$bucketed mismatch")
-    }
-  }
-
-  test("bucketed withStats keeps rows with null DateTime") {
-    import spark.implicits._
-    // a malformed date must not vanish at the bucket joins
-    val g = games.limit(1).withColumn("DateTime",
-      lit(null).cast("timestamp"))
-      .unionByName(games)
-    val n = ChessPipeline.withStats(g, bucketed = true).count()
-    assert(n === games.count() + 1)
+    val incremental = ChessPipeline.withStats(b1)
+      .unionByName(ChessPipeline.withStats(b2, Some(state1)))
+    val full = ChessPipeline.withStats(g)
+    val cols = full.columns.sorted.map(col)
+    val a = incremental.select(cols: _*).orderBy("ID").collect().toSeq
+    val b = full.select(cols: _*).orderBy("ID").collect().toSeq
+    assert(a.size === games.count(), "dropped rows")
+    assert(a === b)
   }
 
   test("incremental two-batch ingestion equals one full batch") {
@@ -266,22 +247,6 @@ class ChessPipelineSpec extends SparkSpec {
     val incremental = ChessPipeline.toPlayerGameRole(ChessPipeline.withStats(b1))
       .unionByName(ChessPipeline.toPlayerGameRole(
         ChessPipeline.withStats(b2, Some(state1))))
-    val full = ChessPipeline.fromPgn(raw)
-    val cols = full.columns.sorted.map(col)
-    val a = incremental.select(cols: _*).orderBy("ID", "Role_player").collect()
-    val b = full.select(cols: _*).orderBy("ID", "Role_player").collect()
-    assert(a.toSeq === b.toSeq)
-  }
-
-  test("incremental two-batch ingestion equals full batch under bucketed stats") {
-    val g = ChessPipeline.parseGames(raw)
-    val b1 = g.filter(col("DateTime") < "2024-03-02")
-    val b2 = g.filter(col("DateTime") >= "2024-03-02")
-    val state1 = ChessPipeline.statsState(b1)
-    val incremental = ChessPipeline.toPlayerGameRole(
-        ChessPipeline.withStats(b1, bucketed = true))
-      .unionByName(ChessPipeline.toPlayerGameRole(
-        ChessPipeline.withStats(b2, Some(state1), bucketed = true)))
     val full = ChessPipeline.fromPgn(raw)
     val cols = full.columns.sorted.map(col)
     val a = incremental.select(cols: _*).orderBy("ID", "Role_player").collect()

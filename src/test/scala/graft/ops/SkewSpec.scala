@@ -2,9 +2,6 @@ package graft.ops
 
 import java.nio.file.Files
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.chess.ChessPipeline
@@ -20,42 +17,7 @@ import graft.chess.ChessPipeline
   * candidate pairs through a handful of reducers: minutes, not
   * seconds).
   */
-class SkewSpec extends SparkSpec {
-
-  private class TaskTimes extends SparkListener {
-    val times: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer[Long]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      synchronized { times += t.taskInfo.duration }
-  }
-
-  /** Runs `body` and returns all task durations (ms) it scheduled. */
-  private def taskTimes(body: => Unit): Seq[Long] = {
-    val l = new TaskTimes
-    spark.sparkContext.addSparkListener(l)
-    try body finally {
-      // the listener bus is async with no public flush; give the
-      // TaskEnd events of the just-finished job time to drain
-      var waited = 0
-      var last = -1
-      while (waited < 10000 && l.synchronized(l.times.size) != last) {
-        last = l.synchronized(l.times.size)
-        Thread.sleep(500); waited += 500
-      }
-      spark.sparkContext.removeSparkListener(l)
-    }
-    l.times.toSeq
-  }
-
-  private def assertNoStraggler(times: Seq[Long], what: String): Unit = {
-    assert(times.nonEmpty)
-    val sorted = times.sorted
-    val median = sorted(sorted.size / 2)
-    val bound = math.max(10L * median, 5000L)
-    assert(sorted.last <= bound,
-      s"$what straggler: max task ${sorted.last}ms > bound ${bound}ms " +
-        s"(median ${median}ms, ${times.size} tasks)")
-    info(f"$what: ${times.size} tasks, median ${median}ms, max ${sorted.last}ms")
-  }
+class SkewSpec extends SparkSpec with graft.StragglerProbe {
 
   test("degenerate near-dup corpus: bucket cap prevents a quadratic LSH straggler") {
     import spark.implicits._
@@ -97,8 +59,6 @@ class SkewSpec extends SparkSpec {
     // per partition, so the hot task must stay near the median, and
     // the stats->games join (on ID) is uniform regardless of player
     val n = 20000
-    // one game per hour => the corpus spans ~27 months, so the
-    // bucketed formulation has real month boundaries to cross
     val games = (1 to n).map { i =>
       val white = if (i % 2 == 0) "hotbot" else s"w$i"
       val black = s"b$i"
@@ -112,46 +72,25 @@ class SkewSpec extends SparkSpec {
     }
     assert(rows === n)
     assertNoStraggler(times, "withStats on hot-player corpus")
-    // the skew-resistant two-phase variant must agree exactly on the
-    // corpus its bounded-task-size design exists for
-    val cols = ChessPipeline.withStats(games).columns.sorted
-      .map(org.apache.spark.sql.functions.col)
-    val plain = ChessPipeline.withStats(games)
-      .select(cols: _*).orderBy("ID").collect().toSeq
-    val bucketed = ChessPipeline.withStats(games, bucketed = true)
-      .select(cols: _*).orderBy("ID").collect().toSeq
-    assert(bucketed === plain)
   }
 
-  test("full ingest on a skewed PGN corpus: no straggler; bucketed output identical") {
-    // the INGEST shape end to end (split-planned PGN parse → running
-    // stats → role doubling → partitioned sink), on the hot-player
-    // corpus the SkewProbe main measures at 1M games: ~30% of seats
-    // belong to 3 bot accounts, 3 months of data
+  test("full ingest on a skewed PGN corpus: no straggler") {
+    // the INGEST shape end to end as IngestMain runs it (split-planned
+    // PGN parse → running stats → role doubling → partitioned sink), on
+    // a hot-player corpus: ~30% of seats belong to 3 bot accounts,
+    // 3 months of data
     val src = graft.chess.SamplePgn.ensureWrittenSkewed(
       nFiles = 4, gamesPerFile = 1000, months = 3, nTail = 500)
-    val raw = spark.read.format("pgn").load(src)
-    def ingest(bucketed: Boolean): org.apache.spark.sql.DataFrame =
-      ChessPipeline.toPlayerGameRole(
-        ChessPipeline.withStats(ChessPipeline.parseGames(raw),
-          bucketed = bucketed))
     val out = java.nio.file.Files.createTempDirectory("skew_ingest_spec")
     try {
       var rows = -1L
       val times = taskTimes {
-        ChessPipeline.writePartitioned(ingest(bucketed = true), out.toString)
+        ChessPipeline.writePartitioned(
+          ChessPipeline.fromPgn(spark.read.format("pgn").load(src)), out.toString)
         rows = spark.read.parquet(out.toString).count()
       }
       assert(rows === 8000L) // 4000 games x 2 roles
-      assertNoStraggler(times, "bucketed ingest on hot-player corpus")
-      // and the two formulations agree row-for-row on the DOUBLED table
-      val cols = ingest(bucketed = false).columns.sorted
-        .map(org.apache.spark.sql.functions.col)
-      val plain = ingest(bucketed = false)
-        .select(cols: _*).orderBy("ID", "Role_player").collect().toSeq
-      val bucketed = ingest(bucketed = true)
-        .select(cols: _*).orderBy("ID", "Role_player").collect().toSeq
-      assert(bucketed === plain)
+      assertNoStraggler(times, "ingest on hot-player corpus")
     } finally graft.LocalFs.deleteRecursively(out)
   }
 }
