@@ -26,22 +26,36 @@ import org.apache.spark.sql.functions._
   * the mixture add only their operators' own documented exchanges,
   * the split is a narrow projection, and the sink partitions by
   * split with each split fanned over its natural parallelism.
+  *
+  * Each stage is materialized once ([[Lineage.cutCounted]]: one job
+  * both persists its rows and counts them), so a later stage, its
+  * count and the sink read those rows instead of re-running every
+  * stage before it (the gate's collapse join and semi-join above
+  * all). The cost is one persisted (MEMORY_AND_DISK) copy per stage:
+  * the full gated documents, at most the input's size, then the
+  * shrinking perplexity-kept and mixed subsets of it. A shuffled gate
+  * join leaves the gated cut hash-partitioned by `doc_id` and the cut
+  * keeps that partitioning, so the stage-2 anti-join does not shuffle
+  * it again. [[run]] frees those cuts, and the ones its operators
+  * make internally, before it returns.
   */
 object Pipeline {
 
   /** Run the chain, returning per-stage counts (and writing the final
-    * corpus under `outDir/corpus`, partitioned by split).
+    * corpus under `outDir/corpus`, partitioned by split). Every RDD
+    * the run persists is unpersisted before it returns.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-      tokenBudget: Long = 10000L, unimax: Boolean = false): Map[String, Long] = {
+      tokenBudget: Long = 10000L, unimax: Boolean = false)
+      : Map[String, Long] = Caches.scoped(spark) {
     val docs = Tables.load(spark, sfDir, "documents")
     val total = docs.count()
     // stage 1: quality/language/repetition/dup gate (D25) — keep only
     // passing docs; the gate's flags are oracle-pinned per signal
     val kept = graft.ops.TextOps.curationGate(spark, sfDir)
       .filter(col("keep")).select("doc_id")
-    val gated: DataFrame = docs.join(kept, Seq("doc_id"), "left_semi")
-    val nGated = gated.count()
+    val (gated, nGated) =
+      Lineage.cutCounted(docs.join(kept, Seq("doc_id"), "left_semi"))
     // stage 2: CCNet §3.3 — drop each language's highest-perplexity
     // tercile (D47). Docs the LM cannot score (no bigram) pass
     // through: the filter only demotes confidently-tail documents.
@@ -52,8 +66,8 @@ object Pipeline {
     // third of the gated set.
     val tail = graft.ops.TextOps.textPplBucketsOn(gated)
       .filter(col("bucket") === "tail").select("doc_id")
-    val headMid = gated.join(tail, Seq("doc_id"), "left_anti")
-    val nPpl = headMid.count()
+    val (headMid, nPpl) =
+      Lineage.cutCounted(gated.join(tail, Seq("doc_id"), "left_anti"))
     // stage 3: training-mix materialization — default D39 (per-source
     // √-temperature token budgets), or with `unimax` the D55 policy
     // (per-LANGUAGE epoch-capped waterfill; Chung et al. 2023 argue it
@@ -66,8 +80,8 @@ object Pipeline {
       else graft.ops.Sampling.sampleMixtureOn(
         headMid.select(col("doc_id"), col("source"), col("text")), tokenBudget))
       .select("doc_id")
-    val mixed = headMid.join(picked, Seq("doc_id"), "left_semi")
-    val nMixed = mixed.count()
+    val (mixed, nMixed) =
+      Lineage.cutCounted(headMid.join(picked, Seq("doc_id"), "left_semi"))
     // stage 4: leakage-safe grouped split (D23) — whole sources land
     // in one split, so near-dups inside a source cannot cross
     // train/test
@@ -140,17 +154,28 @@ object Pipeline {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args.take(2)
+    // `--graph`: run the shared-edges graph-analytics session instead
+    // of the document chain; `--unimax`: stage 3 uses the D55
+    // per-language waterfill instead of the D39 source mixture
+    val budget = args.drop(2).filterNot(a => a == "--graph" || a == "--unimax") match {
+      case Array() => Some(10000L)
+      case Array(b) => b.toLongOption
+      case _ => None
+    }
+    val (sfDir, outDir, tokenBudget) = (args.take(2), budget) match {
+      case (Array(sf, out), Some(b)) => (sf, out, b)
+      case _ =>
+        System.err.println(
+          "usage: runMain graft.Pipeline <sfDir> <outDir> [tokenBudget]\n" +
+          "       runMain graft.Pipeline <sfDir> <outDir> --unimax  (D55 mixture)\n" +
+          "       runMain graft.Pipeline <sfDir> <outDir> --graph   (graphAudit)")
+        sys.exit(2)
+    }
     val spark = Session.start()
     try {
-      // `--graph`: run the shared-edges graph-analytics session
-      // instead of the document chain; `--unimax`: stage 3 uses the
-      // D55 per-language waterfill instead of the D39 source mixture
-      val rest = args.drop(2).filterNot(a => a == "--graph" || a == "--unimax")
       val counts =
         if (args.contains("--graph")) graphAudit(spark, sfDir)
-        else run(spark, sfDir, outDir,
-          rest.headOption.map(_.toLong).getOrElse(10000L),
+        else run(spark, sfDir, outDir, tokenBudget,
           unimax = args.contains("--unimax"))
       println(counts.toSeq.sortBy(_._1)
         .map { case (k, v) => s""""$k":$v""" }

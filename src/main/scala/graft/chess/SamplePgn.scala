@@ -122,46 +122,41 @@ object SamplePgn {
     */
   def ensureWrittenSkewed(nFiles: Int = 32, gamesPerFile: Int = 31250,
       months: Int = 3, hotShare: Double = 0.3, nBots: Int = 3,
-      nTail: Int = 50000): String = {
-    val dir: Path = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_pgn_skew_v${ContentVersion}_${nFiles}x${gamesPerFile}" +
-        s"_m${months}_h${(hotShare * 100).toInt}_b${nBots}_t$nTail")
-    val marker = dir.resolve("_done")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(dir)
-      val rng = new scala.util.Random(4242)
-      var idx = 0
-      for (f <- 0 until nFiles) {
-        val sb = new StringBuilder
-        for (_ <- 0 until gamesPerFile) {
-          sb.append(gameSkewed(rng, idx, months, hotShare, nBots, nTail))
-            .append("\n")
-          idx += 1
-        }
-        Files.writeString(dir.resolve(f"skew_$f%03d.pgn"), sb.toString)
-      }
-      Files.writeString(marker, "ok")
+      nTail: Int = 50000): String =
+    writeOnce(s"graft_pgn_skew_v${ContentVersion}_${nFiles}x${gamesPerFile}" +
+        s"_m${months}_h${(hotShare * 100).toInt}_b${nBots}_t$nTail",
+        seed = 4242, nFiles, gamesPerFile, f => f"skew_$f%03d.pgn") {
+      (rng, idx) => gameSkewed(rng, idx, months, hotShare, nBots, nTail)
     }
-    dir.toString
-  }
 
   /** Writes `nFiles` PGN files × `gamesPerFile` games; idempotent per
     * JVM temp dir. Returns the directory path.
     */
-  def ensureWritten(nFiles: Int = 4, gamesPerFile: Int = 50): String = {
+  def ensureWritten(nFiles: Int = 4, gamesPerFile: Int = 50): String =
     // the dir name versions the CONTENT (the cross-JVM marker would
     // otherwise serve a stale corpus after a generator change)
-    val dir: Path = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_pgn_sample_v${ContentVersion}_${nFiles}x$gamesPerFile")
+    writeOnce(s"graft_pgn_sample_v${ContentVersion}_${nFiles}x$gamesPerFile",
+        seed = 42, nFiles, gamesPerFile, f => f"games_$f%02d.pgn")(game)
+
+  /** The write-once loop behind both corpora: unless `dirName` under
+    * the JVM temp dir already holds the `_done` marker, writes
+    * `nFiles` files of `gamesPerFile` games each, every game drawn
+    * from one `seed`ed RNG with its corpus-wide index. Returns the
+    * directory path.
+    */
+  private def writeOnce(dirName: String, seed: Long, nFiles: Int,
+      gamesPerFile: Int, fileName: Int => String)(
+      gen: (scala.util.Random, Int) => String): String = {
+    val dir: Path = Paths.get(System.getProperty("java.io.tmpdir"), dirName)
     val marker = dir.resolve("_done")
     if (!Files.exists(marker)) {
       Files.createDirectories(dir)
-      val rng = new scala.util.Random(42)
+      val rng = new scala.util.Random(seed)
       var idx = 0
       for (f <- 0 until nFiles) {
         val sb = new StringBuilder
-        for (_ <- 0 until gamesPerFile) { sb.append(game(rng, idx)).append("\n"); idx += 1 }
-        Files.writeString(dir.resolve(f"games_$f%02d.pgn"), sb.toString)
+        for (_ <- 0 until gamesPerFile) { sb.append(gen(rng, idx)).append("\n"); idx += 1 }
+        Files.writeString(dir.resolve(fileName(f)), sb.toString)
       }
       Files.writeString(marker, "ok")
     }

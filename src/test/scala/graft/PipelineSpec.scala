@@ -58,6 +58,23 @@ class PipelineSpec extends SparkSpec {
     assert(spans === 0L)
   }
 
+  test("each stage runs once and the run frees everything it persisted") {
+    val sf = "/root/testdata/sf0.001"
+    val out = Files.createTempDirectory("pipe_cuts").toString
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var counts = Map.empty[String, Long]
+    val stages = Trace.during(spark) { counts = Pipeline.run(spark, sf, out) }
+    assert(counts("n_input") === 500L)
+    // the stage cuts and the operators' internal cuts and caches
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(left.isEmpty, left.values.map(_.toDebugString).mkString("\n"))
+    // each stage materialized once, so no later stage re-runs the
+    // gate: the cut chain runs 65 stages here, the uncut one ran 121;
+    // the bound leaves ~25% for AQE re-planning
+    assert(stages.size <= 80, stages.map(s => s"${s.id} ${s.name}").mkString("\n"))
+  }
+
   test("--unimax swaps stage 3 for the per-language waterfill (D55)") {
     val sf = "/root/testdata/sf0.001"
     val out = Files.createTempDirectory("pipe_umax").toString
