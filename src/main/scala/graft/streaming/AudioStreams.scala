@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming audio operators (SURVEY §2.E9e): continuous
   * envelope-dHash AUDIO near-dup admission over a media stream — the
@@ -12,7 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Everything after the 128-bit signature is
   * [[ImageStreams.applyHashedBatch]] — band-index probe with
-  * partition-pruned reads, exact-Hamming survivor rule, E9 replay
+  * partition-pruned reads, exact-Hamming survivor rule, [[Replay]]
   * protocol — shared verbatim; the only audio-specific code is the
   * front-end ([[graft.ops.Multimodal.audioHashFrameOf]]: RIFF parse,
   * per-window peak envelope, dHash over the envelope). Non-conforming
@@ -38,19 +39,10 @@ object AudioStreams {
   def dedupStream(spark: SparkSession, mediaDir: String, outDir: String,
       indexDir: String, checkpointDir: String,
       maxHamming: Int = 10,
-      mediaSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : StreamingQuery = {
-    // explicit schema lets the stream start on an EMPTY source dir
-    // (r15 verdict item 5; the E12 decontamGateStream contract)
-    val schema = mediaSchema.getOrElse(spark.read.parquet(mediaDir).schema)
-    spark.readStream.schema(schema).parquet(mediaDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(spark, batch.toDF(), batchId, outDir, indexDir, maxHamming)
-      }
-      .start()
-  }
+      mediaSchema: Option[StructType] = None): StreamingQuery =
+    Replay.tail(spark, mediaDir, mediaSchema, checkpointDir) { (batch, batchId) =>
+      applyBatch(spark, batch, batchId, outDir, indexDir, maxHamming)
+    }
 
   private[streaming] def applyBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, outDir: String, indexDir: String,

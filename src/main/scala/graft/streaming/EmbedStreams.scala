@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming embedding operators (SURVEY §2.E9b): continuous NEAR-dup
   * admission over a vector stream.
@@ -24,16 +25,12 @@ object EmbedStreams {
     * — the SAME code path the batch oracle pins, so batch and stream
     * cannot drift.
     *
-    * Exactly-once replay protocol, index/checkpoint lifetime contract
-    * and layout all follow [[TextStreams.dedupStream]]: all three
-    * writes partition by `ingest_batch` under dynamic overwrite, and
-    * the history reads EXCLUDE the current batch id, so a replayed
-    * batch (crash before the offset commit) overwrites exactly its
-    * own partitions with identical rows. `indexDir` holds two
-    * subtables — `sigs` (vec_id, tbl, bucket; sub-partitioned by
-    * `bgrp`, the top [[SigGroupBits]] bucket bits, so each batch's
-    * probe READS only the partitions its Hamming ball can touch
-    * instead of the whole ever-growing history — see
+    * Exactly-once replay and the index/checkpoint lifetime contract:
+    * [[Replay]] (all three writes, both history reads). `indexDir`
+    * holds two subtables — `sigs` (vec_id, tbl, bucket;
+    * sub-partitioned by `bgrp`, the top [[SigGroupBits]] bucket bits,
+    * so each batch's probe READS only the partitions its Hamming ball
+    * can touch instead of the whole ever-growing history — see
     * [[probedGroups]]) and `vecs` (vec_id, embedding) — because
     * candidate generation needs only the bucket rows while exact
     * verification joins the vectors; at 100 TB the sigs table is the
@@ -42,19 +39,10 @@ object EmbedStreams {
   def dedupStream(spark: SparkSession, embDir: String, outDir: String,
       indexDir: String, checkpointDir: String,
       threshold: Double = 0.9,
-      embSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : StreamingQuery = {
-    // explicit schema lets the stream start on an EMPTY source dir
-    // (r15 verdict item 5; the E12 decontamGateStream contract)
-    val schema = embSchema.getOrElse(spark.read.parquet(embDir).schema)
-    spark.readStream.schema(schema).parquet(embDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(spark, batch.toDF(), batchId, outDir, indexDir, threshold)
-      }
-      .start()
-  }
+      embSchema: Option[StructType] = None): StreamingQuery =
+    Replay.tail(spark, embDir, embSchema, checkpointDir) { (batch, batchId) =>
+      applyBatch(spark, batch, batchId, outDir, indexDir, threshold)
+    }
 
   /** Bucket-group dial for the sigs index layout: the index
     * partitions on (tbl, bgrp) where `bgrp` is the TOP `SigGroupBits`
@@ -98,24 +86,24 @@ object EmbedStreams {
       .distinct.toSeq
   }
 
-  /** The partition-pruned history-signature read — one seam so the
-    * growth spec can assert actual file pruning on the exact plan the
-    * stream runs. Restricting the read to the batch's probed (tbl,
-    * bgrp) partitions is answer-identical (a sig outside the probe
-    * ball cannot join) and turns the per-batch index read from
-    * O(history) into O(partitions the batch actually probes) — the
+  /** The partition-pruned history-signature read (empty before the
+    * first committed batch) — one seam so the growth spec can assert
+    * actual file pruning on the exact plan the stream runs.
+    * Restricting the read to the batch's probed (tbl, bgrp)
+    * partitions is answer-identical (a sig outside the probe ball
+    * cannot join) and turns the per-batch index read from O(history)
+    * into O(partitions the batch actually probes) — the
     * ever-growing-table scan was round-8 verdict item 2.
     */
   private[streaming] def historySigsRead(spark: SparkSession, sigsDir: String,
-      batchId: Long, emb: DataFrame): DataFrame = {
-    val cond = probedGroups(emb).groupBy(_._1).map { case (t, pairs) =>
-      col("tbl") === t && col("bgrp").isin(pairs.map(_._2): _*)
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    spark.read.parquet(sigsDir)
-      .filter(col("ingest_batch") =!= batchId) // replay: own rows aren't history
-      .filter(cond)
-      .select(col("vec_id"), col("tbl"), col("bucket"))
-  }
+      batchId: Long, emb: DataFrame): DataFrame =
+    Replay.history(spark, sigsDir, batchId).fold(emb.select(col("vec_id"),
+        lit(0).as("tbl"), lit(0L).as("bucket")).limit(0)) { h =>
+      val cond = probedGroups(emb).groupBy(_._1).map { case (t, pairs) =>
+        col("tbl") === t && col("bgrp").isin(pairs.map(_._2): _*)
+      }.reduceOption(_ || _).getOrElse(lit(false))
+      h.filter(cond).select(col("vec_id"), col("tbl"), col("bucket"))
+    }
 
   private[streaming] def applyBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, outDir: String, indexDir: String,
@@ -123,47 +111,21 @@ object EmbedStreams {
     val sigsDir = s"$indexDir/sigs"
     val vecsDir = s"$indexDir/vecs"
     val emb = batch.select(col("vec_id"), col("embedding"))
-    def hist(dir: String, cols: Seq[String]): DataFrame =
-      if (nonEmptyDir(spark, dir))
-        spark.read.parquet(dir)
-          .filter(col("ingest_batch") =!= batchId) // replay: own rows aren't history
-          .select(cols.map(col): _*)
-      else if (cols == Seq("vec_id", "embedding")) emb.limit(0)
-      else emb.select(col("vec_id"), lit(0).as("tbl"), lit(0L).as("bucket"))
-        .limit(0)
-    val histSigs =
-      if (nonEmptyDir(spark, sigsDir)) historySigsRead(spark, sigsDir, batchId, emb)
-      else hist(sigsDir, Seq("vec_id", "tbl", "bucket"))
     val kept = graft.ops.Dedup.newVectorsAgainstHistory(
         emb,
-        histSigs,
-        hist(vecsDir, Seq("vec_id", "embedding")),
+        historySigsRead(spark, sigsDir, batchId, emb),
+        Replay.history(spark, vecsDir, batchId)
+          .fold(emb.limit(0))(_.select("vec_id", "embedding")),
         threshold)
       .withColumn("ingest_batch", lit(batchId))
       .transform(graft.Lineage.cut) // 3 sinks below; also self-overwrite
     try {
-      graft.ops.Similarity.srpTableBuckets(kept, "vec_id", "embedding",
+      Replay.append(graft.ops.Similarity.srpTableBuckets(kept, "vec_id", "embedding",
           graft.ops.Dedup.embedPlanes, graft.ops.Dedup.embedTables)
         .join(kept.select("vec_id", "ingest_batch"), "vec_id")
-        .withColumn("bgrp", sigGroup(col("bucket")))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch", "tbl", "bgrp")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(sigsDir)
-      kept.write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(vecsDir)
-      kept.write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(outDir)
+        .withColumn("bgrp", sigGroup(col("bucket"))), sigsDir, "tbl", "bgrp")
+      Replay.append(kept, vecsDir)
+      Replay.append(kept, outDir)
     } finally graft.Lineage.free(kept)
-  }
-
-  private def nonEmptyDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 }

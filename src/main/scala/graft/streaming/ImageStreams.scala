@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming multimodal operators (SURVEY §2.E9c): continuous
   * perceptual-hash IMAGE near-dup admission over a media stream — the
@@ -26,16 +27,12 @@ object ImageStreams {
     * [[graft.ops.Multimodal.newImagesAgainstHistory]] — the SAME code
     * path the batch oracle pins, so batch and stream cannot drift.
     *
-    * Exactly-once replay protocol, index/checkpoint lifetime contract
-    * and layout all follow [[TextStreams.dedupStream]] /
-    * [[EmbedStreams.dedupStream]]: both writes partition by
-    * `ingest_batch` under dynamic overwrite, and the history reads
-    * EXCLUDE the current batch id, so a replayed batch (crash before
-    * the offset commit) overwrites exactly its own partitions with
-    * identical rows. `indexDir/hashes` sub-partitions by (band, bgrp)
-    * — `bgrp` the top [[BandGroupBits]] bits of the 8-bit band value
-    * — so each batch's probe READS only the partitions its Hamming-1
-    * ball can touch instead of the whole ever-growing history
+    * Exactly-once replay and the index/checkpoint lifetime contract:
+    * [[Replay]]. The layout follows [[EmbedStreams.dedupStream]]:
+    * `indexDir/hashes` sub-partitions by (band, bgrp) — `bgrp` the
+    * top [[BandGroupBits]] bits of the 8-bit band value — so each
+    * batch's probe READS only the partitions its Hamming-1 ball can
+    * touch instead of the whole ever-growing history
     * ([[probedGroups]]). At 100 TB the index is 8 rows of 16-byte
     * hash + band per admitted image; pixels stay in their arrival
     * batch's tasks.
@@ -43,19 +40,10 @@ object ImageStreams {
   def dedupStream(spark: SparkSession, mediaDir: String, outDir: String,
       indexDir: String, checkpointDir: String,
       maxHamming: Int = 10,
-      mediaSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : StreamingQuery = {
-    // explicit schema lets the stream start on an EMPTY source dir
-    // (r15 verdict item 5; the E12 decontamGateStream contract)
-    val schema = mediaSchema.getOrElse(spark.read.parquet(mediaDir).schema)
-    spark.readStream.schema(schema).parquet(mediaDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(spark, batch.toDF(), batchId, outDir, indexDir, maxHamming)
-      }
-      .start()
-  }
+      mediaSchema: Option[StructType] = None): StreamingQuery =
+    Replay.tail(spark, mediaDir, mediaSchema, checkpointDir) { (batch, batchId) =>
+      applyBatch(spark, batch, batchId, outDir, indexDir, maxHamming)
+    }
 
   /** Bucket-group dial for the hashes-index layout: partitions on
     * (band, bgrp) where `bgrp` is the TOP `BandGroupBits` bits of the
@@ -89,23 +77,25 @@ object ImageStreams {
       .distinct.toSeq
   }
 
-  /** The partition-pruned history-band read — one seam so the growth
-    * spec can assert actual file pruning on the exact plan the stream
-    * runs. Restricting the read to the batch's probed (band, bgrp)
-    * partitions is answer-identical (a band row outside the probe
-    * ball cannot join) and keeps the per-batch index read
-    * O(partitions the batch probes) instead of O(history).
+  /** The partition-pruned history-band read (empty before the first
+    * committed batch) — one seam so the growth spec can assert actual
+    * file pruning on the exact plan the stream runs. Restricting the
+    * read to the batch's probed (band, bgrp) partitions is
+    * answer-identical (a band row outside the probe ball cannot join)
+    * and keeps the per-batch index read O(partitions the batch
+    * probes) instead of O(history).
     */
   private[streaming] def historyBandsRead(spark: SparkSession,
-      hashesDir: String, batchId: Long, hashed: DataFrame): DataFrame = {
-    val cond = probedGroups(hashed).groupBy(_._1).map { case (b, pairs) =>
-      col("band") === b && col("bgrp").isin(pairs.map(_._2): _*)
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    spark.read.parquet(hashesDir)
-      .filter(col("ingest_batch") =!= batchId) // replay: own rows aren't history
-      .filter(cond)
-      .select(col("dhash_hi"), col("dhash_lo"), col("band"), col("bhash"))
-  }
+      hashesDir: String, batchId: Long, hashed: DataFrame): DataFrame =
+    Replay.history(spark, hashesDir, batchId).fold(
+      hashed.select(col("dhash_hi"), col("dhash_lo"),
+        lit(0).as("band"), lit(0L).as("bhash")).limit(0)) { h =>
+      val cond = probedGroups(hashed).groupBy(_._1).map { case (b, pairs) =>
+        col("band") === b && col("bgrp").isin(pairs.map(_._2): _*)
+      }.reduceOption(_ || _).getOrElse(lit(false))
+      h.filter(cond)
+        .select(col("dhash_hi"), col("dhash_lo"), col("band"), col("bhash"))
+    }
 
   private[streaming] def applyBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, outDir: String, indexDir: String,
@@ -119,7 +109,7 @@ object ImageStreams {
 
   /** The hash-GENERIC admission core: everything downstream of the
     * 128-bit signature — band-index probe, exact-Hamming survivor
-    * rule, dynamic-overwrite index/output appends — is front-end
+    * rule, [[Replay]] index/output appends — is front-end
     * independent (the same property [[graft.ops.Multimodal
     * .newImagesAgainstHistory]] gives the batch family). Image (E9c)
     * and video (E9d, [[VideoStreams]]) streams differ ONLY in the
@@ -131,13 +121,8 @@ object ImageStreams {
     val hashesDir = s"$indexDir/hashes"
     val hashed = hashed0
       .transform(graft.Lineage.cut) // probedGroups collect + survivor rule
-    val histBands =
-      if (nonEmptyDir(spark, hashesDir))
-        historyBandsRead(spark, hashesDir, batchId, hashed)
-      else hashed.select(col("dhash_hi"), col("dhash_lo"),
-        lit(0).as("band"), lit(0L).as("bhash")).limit(0)
-    val admitted = graft.ops.Multimodal
-      .newImagesAgainstHistory(hashed, histBands, maxHamming)
+    val admitted = graft.ops.Multimodal.newImagesAgainstHistory(hashed,
+        historyBandsRead(spark, hashesDir, batchId, hashed), maxHamming)
       .withColumn("ingest_batch", lit(batchId))
       .transform(graft.Lineage.cut) // 2 sinks below; also self-overwrite
     try {
@@ -145,23 +130,10 @@ object ImageStreams {
       // (dhash_hi, dhash_lo, band, bhash) — 8 hash+band rows per
       // admitted image, nothing else (review finding: carrying the id
       // bloated the index ~a third for a column every read dropped)
-      graft.ops.Multimodal.bandRowsOf(
+      Replay.append(graft.ops.Multimodal.bandRowsOf(
           admitted.select("dhash_hi", "dhash_lo", "ingest_batch"))
-        .withColumn("bgrp", bandGroup(col("bhash")))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch", "band", "bgrp")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(hashesDir)
-      admitted.write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(outDir)
+        .withColumn("bgrp", bandGroup(col("bhash"))), hashesDir, "band", "bgrp")
+      Replay.append(admitted, outDir)
     } finally graft.Lineage.free(admitted)
-  }
-
-  private def nonEmptyDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming text-analytics operators (SURVEY §2.E) over a document
   * stream with a `text` column.
@@ -21,23 +22,10 @@ object TextStreams {
     * (ingest_batch, kgrp — digest-prefix group), so the per-batch
     * history read partition-prunes to the batch's own prefix groups
     * instead of scanning the ever-growing index (see [[kgrp]]).
-    *
-    * Exactly-once without a transaction log: both writes partition by
-    * `ingest_batch` under DYNAMIC overwrite, so a replayed batch
-    * (crash before the offset commit) overwrites exactly its own
-    * partitions; the history read EXCLUDES the current batch id, so a
-    * replay that already half-wrote its partition does not count its
-    * own rows as history (the [[graft.chess.StreamIngest]] replay
-    * protocol, minus the counter state it doesn't need). The survivor
-    * rule itself is [[graft.ops.Dedup.newAgainstHistory]] — the SAME
-    * code path the batch oracle pins.
-    *
-    * `checkpointDir` and `indexDir` must live and die TOGETHER (the
-    * [[graft.chess.StreamIngest]] contract): replay idempotence keys
-    * the index partitions on this stream's batch ids, so pointing a
-    * FRESH checkpoint (ids restart at 0) at an old index would
-    * overwrite committed partitions with different data. Starting
-    * over means clearing both (and the sink).
+    * Exactly-once replay and the checkpoint/index lifetime contract:
+    * [[Replay]]. The survivor rule itself is
+    * [[graft.ops.Dedup.newAgainstHistory]] — the SAME code path the
+    * batch oracle pins.
     *
     * `bloomBits`: when set, each micro-batch probes a broadcast Bloom
     * filter of the history digests BEFORE the exact anti-join
@@ -54,20 +42,10 @@ object TextStreams {
     */
   def dedupStream(spark: SparkSession, docsDir: String, outDir: String,
       indexDir: String, checkpointDir: String,
-      bloomBits: Option[Int] = None, bloomHashes: Int = 4): StreamingQuery = {
-    // file streams need an explicit schema; the source dir's existing
-    // files define it (the deployment contract: the stream tails a
-    // directory some writer already publishes complete files into)
-    val schema = spark.read.parquet(docsDir).schema
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(spark, batch.toDF(), batchId, outDir, indexDir,
-          bloomBits, bloomHashes)
-      }
-      .start()
-  }
+      bloomBits: Option[Int] = None, bloomHashes: Int = 4): StreamingQuery =
+    Replay.tail(spark, docsDir, None, checkpointDir) { (batch, batchId) =>
+      applyBatch(spark, batch, batchId, outDir, indexDir, bloomBits, bloomHashes)
+    }
 
   /** Digest-prefix groups for the index layout: `kgrp` = the first
     * hex character of the md5 (16 groups, uniform by construction).
@@ -80,27 +58,31 @@ object TextStreams {
     */
   private def kgrp(key: Column): Column = substring(key, 1, 1)
 
-  /** The partition-pruned history-digest read — one seam so the
-    * growth spec can assert actual file pruning on the exact plan the
-    * stream runs.
+  /** The partition-pruned history-digest read (empty before the first
+    * committed batch) — one seam so the growth spec can assert actual
+    * file pruning on the exact plan the stream runs.
     */
   private[streaming] def historyRead(spark: SparkSession, indexDir: String,
-      batchId: Long, keyed: DataFrame): DataFrame = {
-    val groups = keyed.select(kgrp(col("tkey")).as("g")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    spark.read.parquet(indexDir)
-      .filter(col("ingest_batch") =!= batchId) // replay: own rows aren't history
-      .filter(col("kgrp").isin(groups: _*)) // partition-pruned probe
-      .select("tkey")
-  }
+      batchId: Long, keyed: DataFrame): DataFrame =
+    prunedHistory(spark, indexDir, batchId, keyed, "tkey")
+
+  /** [[Replay.history]] restricted to `frame`'s own digest-prefix
+    * groups (column `key`), projected to `key`.
+    */
+  private def prunedHistory(spark: SparkSession, indexDir: String,
+      batchId: Long, frame: DataFrame, key: String): DataFrame =
+    Replay.history(spark, indexDir, batchId).fold(frame.select(key).limit(0)) { h =>
+      val groups = frame.select(kgrp(col(key)).as("g")).distinct()
+        .collect().map(_.getString(0)).toSeq
+      h.filter(col("kgrp").isin(groups: _*)) // partition-pruned probe
+        .select(key)
+    }
 
   private[streaming] def applyBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, outDir: String, indexDir: String,
       bloomBits: Option[Int] = None, bloomHashes: Int = 4): Unit = graft.Caches.scoped(spark) {
     val keyed = batch.withColumn("tkey", md5(col("text").cast("binary")))
-    val hist =
-      if (nonEmptyDir(spark, indexDir)) historyRead(spark, indexDir, batchId, keyed)
-      else keyed.select("tkey").limit(0)
+    val hist = historyRead(spark, indexDir, batchId, keyed)
     // materialize BEFORE writing: the index write below overwrites a
     // path this plan reads (self-overwrite), and a lazy plan would
     // also recompute the anti-join per sink
@@ -108,16 +90,9 @@ object TextStreams {
       .withColumn("ingest_batch", lit(batchId))
       .transform(graft.Lineage.cut)
     try {
-      kept.select("tkey", "ingest_batch")
-        .withColumn("kgrp", kgrp(col("tkey")))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch", "kgrp")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(indexDir)
-      kept.write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(outDir)
+      Replay.append(kept.select("tkey", "ingest_batch")
+        .withColumn("kgrp", kgrp(col("tkey"))), indexDir, "kgrp")
+      Replay.append(kept, outDir)
     } finally graft.Lineage.free(kept)
   }
 
@@ -135,16 +110,6 @@ object TextStreams {
         graft.ops.Dedup.newAgainstHistory(keyed, hist)
     }
 
-  /** Hadoop-FS existence check (remote URIs work, like the ingest
-    * paths): the index dir is absent-or-empty only before the first
-    * committed batch.
-    */
-  private def nonEmptyDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
-
   /** E10: continuous C4 cleaning against a PERSISTENT span index —
     * the streaming twin of `text_c4_clean_incremental` (D29c), and
     * the shape a continuously-crawled corpus needs: the corpus-wide
@@ -159,38 +124,24 @@ object TextStreams {
     * [[graft.ops.TextOps.cleanCore]] — the code path the D29c oracle
     * pins.
     *
-    * Index layout + replay protocol follow [[dedupStream]] (E9): the
-    * index partitions on (ingest_batch, kgrp — digest prefix), the
-    * per-batch read prunes to the batch's own prefix groups
-    * ([[c4HistoryRead]]), both sinks use batch-partitioned dynamic
-    * overwrite and the history read excludes the current batch id.
+    * Index layout follows [[dedupStream]] (E9): the index partitions
+    * on (ingest_batch, kgrp — digest prefix) and the per-batch read
+    * prunes to the batch's own prefix groups ([[c4HistoryRead]]).
+    * Replay protocol: [[Replay]].
     */
   def c4CleanStream(spark: SparkSession, pagesDir: String, outDir: String,
       indexDir: String, checkpointDir: String, minWords: Int = 3,
-      minLines: Int = 3): StreamingQuery = {
-    val schema = spark.read.parquet(pagesDir).schema
-    spark.readStream.schema(schema).parquet(pagesDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        c4ApplyBatch(spark, batch.toDF(), batchId, outDir, indexDir,
-          minWords, minLines)
-      }
-      .start()
-  }
+      minLines: Int = 3): StreamingQuery =
+    Replay.tail(spark, pagesDir, None, checkpointDir) { (batch, batchId) =>
+      c4ApplyBatch(spark, batch, batchId, outDir, indexDir, minWords, minLines)
+    }
 
   /** The kgrp-pruned history-span read (the [[historyRead]] pattern on
     * the span-digest index).
     */
   private[streaming] def c4HistoryRead(spark: SparkSession, indexDir: String,
-      batchId: Long, spans: DataFrame): DataFrame = {
-    val groups = spans.select(kgrp(col("h")).as("g")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    spark.read.parquet(indexDir)
-      .filter(col("ingest_batch") =!= batchId) // replay: own rows aren't history
-      .filter(col("kgrp").isin(groups: _*))
-      .select("h")
-  }
+      batchId: Long, spans: DataFrame): DataFrame =
+    prunedHistory(spark, indexDir, batchId, spans, "h")
 
   private[streaming] def c4ApplyBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, outDir: String, indexDir: String,
@@ -201,28 +152,19 @@ object TextStreams {
     // joins and the index-write anti-join) — without materialization
     // each re-scans the ever-growing index's pruned partitions
     // (review finding)
-    val hist = (
-      if (nonEmptyDir(spark, indexDir)) c4HistoryRead(spark, indexDir, batchId, spans)
-      else spans.select("h").limit(0)
-    ).transform(graft.Lineage.cut)
+    val hist = c4HistoryRead(spark, indexDir, batchId, spans)
+      .transform(graft.Lineage.cut)
     val cleaned = graft.ops.TextOps.cleanCore(surv, spans, hist)
       .withColumn("ingest_batch", lit(batchId))
       .transform(graft.Lineage.cut) // self-overwrite + two sinks
     try {
       // index append: the batch's NEW distinct span digests (replay
       // overwrites exactly its own partitions)
-      spans.select("h").distinct()
+      Replay.append(spans.select("h").distinct()
         .join(hist.select("h").distinct(), Seq("h"), "left_anti")
         .withColumn("ingest_batch", lit(batchId))
-        .withColumn("kgrp", kgrp(col("h")))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch", "kgrp")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(indexDir)
-      cleaned.write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(outDir)
+        .withColumn("kgrp", kgrp(col("h"))), indexDir, "kgrp")
+      Replay.append(cleaned, outDir)
     } finally graft.Lineage.free(cleaned)
   }
 
@@ -235,10 +177,10 @@ object TextStreams {
     * cached once, the totals/priors a one-row broadcast), so unlike
     * the four persistent-index streams this one is STATELESS per
     * batch: no index, no watermark, nothing in the state store, and
-    * replay idempotence comes from batch-partitioned dynamic overwrite
-    * alone. Scores are identical to the batch twin
-    * (textNbQualityHeldout) by construction — the stream calls the
-    * same nbProj/nbModel/nbScoreBatch seams, which also means the
+    * replay idempotence comes from [[Replay.append]] alone. Scores
+    * are identical to the batch twin (textNbQualityHeldout) by
+    * construction — the stream calls the same
+    * nbProj/nbModel/nbScoreBatch seams, which also means the
     * micro-batch path inherits the Collapse exact-dup scoring (a
     * dup-heavy crawl batch scores each unique text once).
     *
@@ -249,32 +191,28 @@ object TextStreams {
   def qualityGateStream(spark: SparkSession, histDir: String,
       docsDir: String, outDir: String, checkpointDir: String,
       curated: Seq[String] = graft.ops.TextOps.CuratedSources,
-      docsSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : StreamingQuery = {
+      docsSchema: Option[StructType] = None): StreamingQuery = {
     val (uni, totals) = graft.ops.TextOps.nbModel(
       graft.ops.TextOps.nbProj(spark.read.parquet(histDir), curated))
     // materialize the frozen model ONCE, before the first micro-batch
     // (uni is cached; an unmaterialized cache would re-train per batch)
     uni.count()
     // an always-on gate may start before the source dir has any files:
-    // pass docsSchema explicitly to skip the eager inference read
-    // (which throws "unable to infer schema" on an empty directory)
-    val schema = docsSchema.getOrElse(spark.read.parquet(docsDir).schema)
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.Caches.scoped(spark) {
-          graft.ops.TextOps.nbScoreBatch(
-              graft.ops.TextOps.nbProj(batch.toDF(), curated), uni, totals)
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(outDir)
-        }
-      }
-      .start()
+    // docsSchema skips the inference read (see Replay.tail)
+    Replay.tail(spark, docsDir, docsSchema, checkpointDir) { (batch, batchId) =>
+      qualityApplyBatch(spark, batch, batchId, outDir, uni, totals, curated)
+    }
+  }
+
+  /** One quality-gate micro-batch: score with the frozen model
+    * (`uni`, `totals` from [[graft.ops.TextOps.nbModel]]) and append.
+    */
+  private[streaming] def qualityApplyBatch(spark: SparkSession,
+      batch: DataFrame, batchId: Long, outDir: String, uni: DataFrame,
+      totals: DataFrame, curated: Seq[String]): Unit = graft.Caches.scoped(spark) {
+    Replay.append(graft.ops.TextOps.nbScoreBatch(
+        graft.ops.TextOps.nbProj(batch, curated), uni, totals)
+      .withColumn("ingest_batch", lit(batchId)), outDir)
   }
 
   /** E12: streaming DECONTAMINATION gate — the deployment shape of
@@ -288,7 +226,7 @@ object TextStreams {
     * STATELESSLY through [[graft.ops.Sampling.verdictCore]] — the
     * exact code path the batch oracle (`contamination_verdict`) pins.
     * Nothing enters the state store; replay idempotence is
-    * batch-partitioned dynamic overwrite alone (the E11 protocol).
+    * [[Replay.append]] alone (as in E11).
     *
     * Output: every train doc with its shingle/collision counts, 6dp
     * overlap `frac` and the PaLM-rule `drop` verdict (≥ num/den of the
@@ -296,39 +234,32 @@ object TextStreams {
     * the auditable gate a continuous pretraining feed filters on.
     *
     * `docsSchema`: pass explicitly to start the gate on a
-    * not-yet-populated source directory (otherwise the schema is
-    * inferred from the existing files, the pre-existing streams'
-    * contract).
+    * not-yet-populated source directory ([[Replay.tail]]).
     */
   def decontamGateStream(spark: SparkSession, evalDir: String,
       docsDir: String, outDir: String, checkpointDir: String,
       num: Int = 7, den: Int = 10,
-      docsSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : StreamingQuery = {
-    import graft.ops.{Dedup, Sampling}
+      docsSchema: Option[StructType] = None): StreamingQuery = {
     val testSh = spark.read.parquet(evalDir)
-      .select(explode(Dedup.shingles(col("text"))).as("g")).distinct()
+      .select(explode(graft.ops.Dedup.shingles(col("text"))).as("g")).distinct()
       .cache()
     // materialize the frozen eval set ONCE, before the first batch
     testSh.count()
-    val schema = docsSchema.getOrElse(spark.read.parquet(docsDir).schema)
-    spark.readStream.schema(schema).parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.Caches.scoped(spark) {
-          Sampling.verdictCore(
-              batch.toDF().select(col("doc_id"),
-                Dedup.shingles(col("text")).as("sh")),
-              testSh, num, den)
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(outDir)
-        }
-      }
-      .start()
+    Replay.tail(spark, docsDir, docsSchema, checkpointDir) { (batch, batchId) =>
+      decontamApplyBatch(spark, batch, batchId, outDir, testSh, num, den)
+    }
+  }
+
+  /** One decontamination micro-batch: verdict against the frozen eval
+    * shingle set `testSh` (column `g`) and append.
+    */
+  private[streaming] def decontamApplyBatch(spark: SparkSession,
+      batch: DataFrame, batchId: Long, outDir: String, testSh: DataFrame,
+      num: Int, den: Int): Unit = graft.Caches.scoped(spark) {
+    Replay.append(graft.ops.Sampling.verdictCore(
+        batch.select(col("doc_id"), graft.ops.Dedup.shingles(col("text")).as("sh")),
+        testSh, num, den)
+      .withColumn("ingest_batch", lit(batchId)), outDir)
   }
 
   /** E8: streaming heavy hitters — the running top tokens of a

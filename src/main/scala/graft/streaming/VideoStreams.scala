@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming video operators (SURVEY §2.E9d): continuous
   * perceptual-hash VIDEO near-dup admission over a media stream — the
@@ -10,8 +11,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * The whole post-signature machinery — Hamming-1 band-index probe,
   * partition-pruned history read, exact-verify survivor rule,
-  * exactly-once replay via dynamic overwrite + own-batch history
-  * exclusion — is [[ImageStreams.applyHashedBatch]], shared verbatim:
+  * exactly-once replay ([[Replay]]) — is
+  * [[ImageStreams.applyHashedBatch]], shared verbatim:
   * the only video-specific code is the front-end that turns an AVI
   * byte column into the 128-bit per-clip signature
   * ([[graft.ops.Video.videoHashFrameOf]]: container parse, sampled
@@ -35,20 +36,10 @@ object VideoStreams {
   def dedupStream(spark: SparkSession, mediaDir: String, outDir: String,
       indexDir: String, checkpointDir: String,
       maxHamming: Int = 10,
-      mediaSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : StreamingQuery = {
-    // explicit schema lets the stream start on an EMPTY source dir
-    // (r15 verdict item 5 — the eager infer threw before the first
-    // file arrived; the E12 decontamGateStream contract)
-    val schema = mediaSchema.getOrElse(spark.read.parquet(mediaDir).schema)
-    spark.readStream.schema(schema).parquet(mediaDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(spark, batch.toDF(), batchId, outDir, indexDir, maxHamming)
-      }
-      .start()
-  }
+      mediaSchema: Option[StructType] = None): StreamingQuery =
+    Replay.tail(spark, mediaDir, mediaSchema, checkpointDir) { (batch, batchId) =>
+      applyBatch(spark, batch, batchId, outDir, indexDir, maxHamming)
+    }
 
   private[streaming] def applyBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, outDir: String, indexDir: String,

@@ -46,14 +46,19 @@ class DecontamGateStreamSpec extends SparkSpec {
     Files.move(part.get, Paths.get(srcDir, name))
   }
 
-  private def rowsOf(out: String) =
-    spark.read.parquet(out)
+  private def rowsOf(out: String) = {
+    val rows = spark.read.parquet(out)
       .select(col("doc_id"), col("n_shingles"), col("n_common"),
         col("frac"), col("drop"),
         col("ingest_batch").cast("long").as("ingest_batch"))
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getBoolean(4), r.getLong(5)))).toMap
+        r.getDouble(3), r.getBoolean(4), r.getLong(5))))
+    // one row per doc: a replay that appended instead of overwriting
+    // its partition would duplicate them
+    assert(rows.map(_._1).distinct.length === rows.length, "duplicate doc rows")
+    rows.toMap
+  }
 
   test("stream verdicts == batch twin, both outcomes live, replay is a no-op") {
     val evalDir = Files.createTempDirectory("dgs_eval").toString + "/e"
@@ -97,23 +102,15 @@ class DecontamGateStreamSpec extends SparkSpec {
     try q2.processAllAvailable() finally q2.stop()
     assert(rowsOf(out) === got, "restart with committed offsets mutated output")
 
-    // replay the committed batch 1 by hand (the crash-before-offset
-    // window): dynamic overwrite of its own partition, rows identical
-    graft.Caches.scoped(spark) {
-      graft.ops.Sampling.verdictCore(
-          batch1.toDF("doc_id", "text", "source")
-            .select(col("doc_id"),
-              graft.ops.Dedup.shingles(col("text")).as("sh")),
-          eval.toDF("doc_id", "text", "source")
-            .select(explode(graft.ops.Dedup.shingles(col("text"))).as("g"))
-            .distinct(),
-          7, 10)
-        .withColumn("ingest_batch", lit(1L))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(out)
-    }
+    // replay the committed batch 1 through the gate's own applier (the
+    // crash-before-offset window): dynamic overwrite of its own
+    // partition, rows identical
+    TextStreams.decontamApplyBatch(spark,
+      batch1.toDF("doc_id", "text", "source"), 1L, out,
+      eval.toDF("doc_id", "text", "source")
+        .select(explode(graft.ops.Dedup.shingles(col("text"))).as("g"))
+        .distinct(),
+      7, 10)
     assert(rowsOf(out) === got, "replayed batch diverged from its commit")
   }
 }

@@ -8,15 +8,16 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 
-/** r15 verdict item 5: every media dedup stream must be startable on
-  * an EMPTY source directory via an explicit schema (the deployment
-  * shape — the gate comes up BEFORE the feed's first file lands).
-  * Each case: start on an empty dir (the eager-infer path would throw
-  * "Unable to infer schema" here), publish the first batch, assert it
-  * is admitted through the normal survivor rule. The cross-batch /
+/** r15 verdict item 5: every media dedup stream and both text gates
+  * must be startable on an EMPTY source directory via an explicit
+  * schema (the deployment shape — the gate comes up BEFORE the feed's
+  * first file lands). Each case: start on an empty dir (the
+  * eager-infer path would throw "Unable to infer schema" here),
+  * publish the first batch, assert it is admitted through the normal
+  * survivor rule, or scored / verdicted by the gate. The cross-batch /
   * replay batteries live in the per-modality specs; this one pins
-  * only the cold-start seam, which is front-end-specific (four
-  * different schema params) even though the index machinery is shared.
+  * only the cold-start seam, which is front-end-specific (one schema
+  * param per stream) even though the replay machinery is shared.
   */
 class EmptyDirStartSpec extends SparkSpec {
 
@@ -25,6 +26,9 @@ class EmptyDirStartSpec extends SparkSpec {
   private val embSchema = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
+  private val docsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("source", StringType)))
 
   private def publish(srcDir: String, name: String, write: String => Unit)
       : Unit = {
@@ -125,6 +129,50 @@ class EmptyDirStartSpec extends SparkSpec {
           .write.mode("overwrite").parquet(tmp))
       q.processAllAvailable()
       assert(ids(out, "vec_id") === Seq(1L))
+    } finally q.stop()
+  }
+
+  private def publishDocs(src: String, rows: Seq[(Long, String, String)])
+      : Unit = {
+    import spark.implicits._
+    publish(src, "b0.parquet", tmp =>
+      rows.toDF("doc_id", "text", "source").coalesce(1)
+        .write.mode("overwrite").parquet(tmp))
+  }
+
+  test("quality gate starts on an empty dir and scores the first batch") {
+    import spark.implicits._
+    val (src, out, hist, ckpt) = dirs()
+    Seq((1L, "good clean prose text", "src0"), (2L, "spam junk click buy", "raw"))
+      .toDF("doc_id", "text", "source").write.mode("overwrite").parquet(hist)
+    val q = TextStreams.qualityGateStream(spark, hist, src, out, ckpt,
+      docsSchema = Some(docsSchema))
+    try {
+      q.processAllAvailable()
+      publishDocs(src, Seq((100L, "good clean prose", "crawl"),
+        (101L, "spam junk click", "crawl")))
+      q.processAllAvailable()
+      val keep = spark.read.parquet(out).select("doc_id", "keep").collect()
+        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+      assert(keep === Map(100L -> true, 101L -> false))
+    } finally q.stop()
+  }
+
+  test("decontamination gate starts on an empty dir and verdicts the first batch") {
+    import spark.implicits._
+    val (src, out, eval, ckpt) = dirs()
+    Seq((900L, "alpha beta gamma delta epsilon zeta", "eval"))
+      .toDF("doc_id", "text", "source").write.mode("overwrite").parquet(eval)
+    val q = TextStreams.decontamGateStream(spark, eval, src, out, ckpt,
+      docsSchema = Some(docsSchema))
+    try {
+      q.processAllAvailable()
+      publishDocs(src, Seq((100L, "alpha beta gamma delta epsilon zeta", "crawl"),
+        (101L, "novel words nothing shared here", "crawl")))
+      q.processAllAvailable()
+      val drop = spark.read.parquet(out).select("doc_id", "drop").collect()
+        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+      assert(drop === Map(100L -> true, 101L -> false))
     } finally q.stop()
   }
 }

@@ -46,6 +46,20 @@ class QualityGateStreamSpec extends SparkSpec {
     Files.move(part.get, Paths.get(srcDir, name))
   }
 
+  private def rowsOf(out: String) = {
+    val rows = spark.read.parquet(out)
+      // the partition column is directory-inferred (int, not long)
+      .select(col("doc_id"), col("n_toks"), col("nb_score"), col("keep"),
+        col("ingest_batch").cast("long").as("ingest_batch"))
+      .collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2),
+        r.getBoolean(3), r.getLong(4))))
+    // one row per doc: a replay that appended instead of overwriting
+    // its partition would duplicate them
+    assert(rows.map(_._1).distinct.length === rows.length, "duplicate doc rows")
+    rows.toMap
+  }
+
   test("stream scores == frozen-model batch twin, both verdicts live, two batches") {
     val histDir = Files.createTempDirectory("qgs_hist").toString + "/h"
     val src = Files.createTempDirectory("qgs_src").toString
@@ -61,13 +75,7 @@ class QualityGateStreamSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    val got = spark.read.parquet(out)
-      // the partition column is directory-inferred (int, not long)
-      .select(col("doc_id"), col("n_toks"), col("nb_score"), col("keep"),
-        col("ingest_batch").cast("long").as("ingest_batch"))
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2),
-        r.getBoolean(3), r.getLong(4)))).toMap
+    val got = rowsOf(out)
     assert(got.keySet === (batch0 ++ batch1).map(_._1).toSet)
     assert(got(100L)._4 === 0L && got(103L)._4 === 1L,
       "batch partitioning must follow arrival")
@@ -87,5 +95,38 @@ class QualityGateStreamSpec extends SparkSpec {
     // non-vacuous gate: the curated-ish docs pass, the junk docs fail
     assert(got(100L)._3 && got(102L)._3)
     assert(!got(101L)._3 && !got(104L)._3)
+  }
+
+  test("restart with nothing new and a replayed batch both leave the output unchanged") {
+    val histDir = Files.createTempDirectory("qgs_hist").toString + "/h"
+    val src = Files.createTempDirectory("qgs_src").toString
+    val out = Files.createTempDirectory("qgs_out").toString
+    val ckpt = Files.createTempDirectory("qgs_ckpt").toString
+    hist.toDF("doc_id", "text", "source").write.parquet(histDir)
+
+    publish(src, "b0.parquet", batch0)
+    val q = TextStreams.qualityGateStream(spark, histDir, src, out, ckpt)
+    try {
+      q.processAllAvailable()
+      publish(src, "b1.parquet", batch1)
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = rowsOf(out)
+    assert(got.keySet === (batch0 ++ batch1).map(_._1).toSet)
+
+    // restart on the same checkpoint with nothing new: a no-op
+    val q2 = TextStreams.qualityGateStream(spark, histDir, src, out, ckpt)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(rowsOf(out) === got, "restart with committed offsets mutated output")
+
+    // replay the committed batch 1 through the gate's own applier (the
+    // crash-before-offset window): dynamic overwrite of its own
+    // partition, rows identical
+    val curated = graft.ops.TextOps.CuratedSources
+    val (uni, totals) = graft.ops.TextOps.nbModel(graft.ops.TextOps.nbProj(
+      spark.read.parquet(histDir), curated))
+    TextStreams.qualityApplyBatch(spark,
+      batch1.toDF("doc_id", "text", "source"), 1L, out, uni, totals, curated)
+    assert(rowsOf(out) === got, "replayed batch diverged from its commit")
   }
 }
