@@ -10,24 +10,29 @@ import org.apache.spark.sql.GraftSqlShim
 object RunQ {
 
   /** The [[Trace]] stage table (SPARK_GRAFT_STAGES=1): one row per
-    * stage — tasks, run/CPU seconds, shuffle read/write, records,
-    * spill — then the query's shuffle totals. The r14 attribution
-    * instrument: a per-query CPU total says a query got slower; this
-    * says WHICH exchange boundary carries the growth across scale tiers
-    * (run the same query at sf10 and sf100, diff the tables
-    * stage-by-stage).
+    * stage — tasks, run/CPU seconds, task deserialization CPU, shuffle
+    * read/write, records, spill — then the query's task and shuffle
+    * totals. The r14 attribution instrument: a per-query CPU total
+    * says a query got slower; this says WHICH exchange boundary carries
+    * the growth across scale tiers (run the same query at sf10 and
+    * sf100, diff the tables stage-by-stage).
     */
   private def dumpStages(tag: String, rs: Seq[Trace.Stage]): Unit = {
     def mb(b: Long) = b / 1048576.0
     println(f"[runq] $tag stages (${rs.size}):")
-    println("[runq]   id tasks  wall_s   cpu_s  sread_MB srecs swrite_MB wrecs spill_MB input_MB  name")
+    println("[runq]   id tasks  wall_s   cpu_s deser_cpu_s  sread_MB srecs swrite_MB wrecs spill_MB input_MB  name")
     rs.foreach { r =>
       val (m, sr, sw) = (r.metrics, r.metrics.shuffleReadMetrics, r.metrics.shuffleWriteMetrics)
       println(f"[runq]   ${r.id}%4d ${r.tasks}%4d ${m.executorRunTime / 1000.0}%8.1f " +
-        f"${m.executorCpuTime / 1e9}%8.1f ${mb(sr.totalBytesRead)}%8.1f ${sr.recordsRead}%9d " +
+        f"${m.executorCpuTime / 1e9}%8.1f ${m.executorDeserializeCpuTime / 1e9}%11.2f " +
+        f"${mb(sr.totalBytesRead)}%8.1f ${sr.recordsRead}%9d " +
         f"${mb(sw.bytesWritten)}%8.1f ${sw.recordsWritten}%9d ${mb(r.spillBytes)}%8.1f " +
         f"${mb(m.inputMetrics.bytesRead)}%8.1f  ${r.name.take(70)}")
     }
+    def secs(f: Trace.Stage => Long) = rs.map(f).sum / 1e9
+    println(f"[runq] $tag tasks: ${rs.map(_.tasks).sum}, " +
+      f"cpu ${secs(_.metrics.executorCpuTime)}%.2f s, " +
+      f"deser_cpu ${secs(_.metrics.executorDeserializeCpuTime)}%.2f s")
     val written = rs.map(_.metrics.shuffleWriteMetrics.bytesWritten).sum
     val read = rs.map(_.metrics.shuffleReadMetrics.totalBytesRead).sum
     println(f"[runq] $tag shuffle: write ${mb(written)}%.1f MiB, read ${mb(read)}%.1f MiB")

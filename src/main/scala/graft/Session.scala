@@ -12,6 +12,29 @@ import org.apache.spark.sql.SparkSession
   */
 object Session {
 
+  /** AQE's shuffle sizing. Specs that guard task counts run under it
+    * too, since their own session leaves it unset.
+    */
+  val wideShuffles: Seq[(String, String)] = Seq(
+    // shuffles START wide and let AQE coalesce down (parallelismFirst
+    // keeps small exchanges at full parallelism): with the fixed
+    // 32-partition default, sf100's 600M-row sort-merge sides ran
+    // ~2 GB/partition and spilled — q5_volume measured 194 -> 147 s
+    // (-25%) with wide initial partitions. On a real cluster this is
+    // the knob that makes one session config survive 100x data drift.
+    // Under AQE `sessionState.conf.numShufflePartitions` returns THIS
+    // width, so never pass it as an explicit count: an explicit count
+    // is never coalesced (text_ppl_buckets' range sort ran 500 tasks
+    // per stage for 500 docs that way); omit the count and AQE sizes
+    // the exchange.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "1024",
+    // ...and let AQE coalesce CACHED plans too, or every .cache()
+    // materializes all 1024 initial partitions and each downstream
+    // pass schedules 1024 mostly-empty tasks (dedup_incremental_bloom
+    // warm: 2.6 s wide-initials-only vs 0.7 s with this — the cached
+    // history index is tiny but was pinned at the initial width).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+
   /** Build (or return the running) session, set Spark's log level, and
     * apply `overrides` last (RunQ's `SPARK_GRAFT_CONF` A/B probes).
     */
@@ -30,19 +53,7 @@ object Session {
       // avoid (found by the r13 knnskew probe: the hot Voronoi task
       // sorted 2e8 rows). 128k keys x O(k) state is a few tens of MB.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
-      // shuffles START wide and let AQE coalesce down (parallelismFirst
-      // keeps small exchanges at full parallelism): with the fixed
-      // 32-partition default, sf100's 600M-row sort-merge sides ran
-      // ~2 GB/partition and spilled — q5_volume measured 194 -> 147 s
-      // (-25%) with wide initial partitions. On a real cluster this is
-      // the knob that makes one session config survive 100x data drift.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 1024)
-      // ...and let AQE coalesce CACHED plans too, or every .cache()
-      // materializes all 1024 initial partitions and each downstream
-      // pass schedules 1024 mostly-empty tasks (dedup_incremental_bloom
-      // warm: 2.6 s wide-initials-only vs 0.7 s with this — the cached
-      // history index is tiny but was pinned at the initial width).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config(wideShuffles.toMap)
       // let AQE convert a sort-merge join to broadcast-hash when the
       // RUNTIME build side lands under 64 MB (the default 10 MB left
       // q5_volume's 12.5 MB ASIA-orders side sorting 6M lineitem rows

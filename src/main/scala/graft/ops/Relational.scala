@@ -527,6 +527,14 @@ object Relational {
     * RDD zipWithIndex is the one genuinely per-partition-imperative
     * step (global index assignment) that the DataFrame API cannot
     * express without the degenerate global window.
+    *
+    * The range exchange takes no explicit count, so AQE sizes it from
+    * runtime bytes (up to the session's initial width): a few tasks
+    * for a small table, not one per few sample keys. The ranks survive
+    * the coalescing because AQE merges only ADJACENT reducer
+    * partitions — each coalesced partition is still one contiguous key
+    * range, in partition order — and never skew-splits a
+    * repartition-by-columns exchange.
     */
   def qNtileScalable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -537,10 +545,9 @@ object Relational {
     val df = t(s, dir, "customer").select(
       col("c_custkey").cast("long").as("c_custkey"),
       col("c_acctbal").cast("double").as("c_acctbal"))
-    val parts = s.sessionState.conf.numShufflePartitions
     val n = df.count()
     val sorted = df
-      .repartitionByRange(parts, col("c_acctbal"), col("c_custkey"))
+      .repartitionByRange(col("c_acctbal"), col("c_custkey"))
       .sortWithinPartitions("c_acctbal", "c_custkey")
       .transform(graft.Lineage.cut)
     // SQL ntile(k): the first n%k buckets get ceil(n/k) rows, the rest

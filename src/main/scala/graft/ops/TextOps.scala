@@ -930,6 +930,14 @@ object TextOps {
     * the frame it is filtering, not a corpus containing
     * already-dropped docs (round 12, the [[graft.Pipeline]] stage-2
     * seam).
+    *
+    * The range exchange takes no explicit count, so AQE sizes it from
+    * runtime bytes (up to the session's initial width) instead of
+    * running one task per few sample keys. Coalescing keeps the order
+    * the ranks depend on: it merges only ADJACENT reducer partitions,
+    * so each coalesced partition is still one contiguous key range,
+    * and skew splitting never applies to a repartition-by-columns
+    * exchange.
     */
   def textPplBucketsOn(input: DataFrame): DataFrame = {
     val s = input.sparkSession
@@ -939,9 +947,8 @@ object TextOps {
       .join(input.select(col("doc_id"), col("lang")), "doc_id")
       .select(col("doc_id").cast("long"), col("lang"),
         col("avg_bits").cast("double"))
-    val parts = s.sessionState.conf.numShufflePartitions
     val sorted = scored
-      .repartitionByRange(parts, col("lang"), col("avg_bits"), col("doc_id"))
+      .repartitionByRange(col("lang"), col("avg_bits"), col("doc_id"))
       .sortWithinPartitions("lang", "avg_bits", "doc_id")
       .transform(graft.Lineage.cut) // zipWithIndex runs 2 jobs over it
     val idxd = sorted.rdd.zipWithIndex().map { case (r, i) =>

@@ -64,15 +64,24 @@ class PipelineSpec extends SparkSpec {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     var counts = Map.empty[String, Long]
-    val stages = Trace.during(spark) { counts = Pipeline.run(spark, sf, out) }
+    val stages = withConf(Session.wideShuffles: _*) {
+      Trace.during(spark) { counts = Pipeline.run(spark, sf, out) }
+    }
     assert(counts("n_input") === 500L)
     // the stage cuts and the operators' internal cuts and caches
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
     assert(left.isEmpty, left.values.map(_.toDebugString).mkString("\n"))
     // each stage materialized once, so no later stage re-runs the
-    // gate: the cut chain runs 65 stages here, the uncut one ran 121;
+    // gate: the cut chain runs ~60 stages here, the uncut one ran 121;
     // the bound leaves ~25% for AQE re-planning
     assert(stages.size <= 80, stages.map(s => s"${s.id} ${s.name}").mkString("\n"))
+    // under the production initial width the range sort follows the
+    // rows: 70 tasks here, 825 when it ran at an explicit count of
+    // numShufflePartitions (about one task per scored doc); the bound
+    // leaves ~25%
+    val tasks = stages.map(_.tasks).sum
+    assert(tasks <= 90, s"$tasks tasks:\n" +
+      stages.map(s => s"${s.id} ${s.tasks} ${s.name}").mkString("\n"))
   }
 
   test("--unimax swaps stage 3 for the per-language waterfill (D55)") {

@@ -58,13 +58,7 @@ class CosBestSpec extends SparkSpec {
 
   test("CosBest codegen COMPILES: strict no-fallback run stays correct") {
     import spark.implicits._
-    val conf = spark.conf
-    val prevFallback = conf.get("spark.sql.codegen.fallback")
-    val prevExcluded = conf.getOption("spark.sql.optimizer.excludedRules")
-    try {
-      conf.set("spark.sql.codegen.fallback", "false")
-      conf.set("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    withStrictCodegen {
       val centers = IndexedSeq(0 -> Array(1.0, 0.0), 1 -> Array(0.0, 1.0))
       val out = Seq((1L, Array(0.0f, 2.0f)), (2L, Array(3.0f, 0.0f)))
         .toDF("vec_id", "embedding")
@@ -74,12 +68,6 @@ class CosBestSpec extends SparkSpec {
           (r.getStruct(1).getDouble(0), r.getStruct(1).getInt(1))).toMap
       assert(out(1L) === ((1.0, 1)))
       assert(out(2L) === ((1.0, 0)))
-    } finally {
-      conf.set("spark.sql.codegen.fallback", prevFallback)
-      prevExcluded match {
-        case Some(v) => conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => conf.unset("spark.sql.optimizer.excludedRules")
-      }
     }
   }
 }

@@ -60,13 +60,7 @@ class CosTopKSpec extends SparkSpec {
   }
 
   test("strict no-fallback codegen run stays correct") {
-    val conf = spark.conf
-    val prevFallback = conf.get("spark.sql.codegen.fallback")
-    val prevExcluded = conf.getOption("spark.sql.optimizer.excludedRules")
-    try {
-      conf.set("spark.sql.codegen.fallback", "false")
-      conf.set("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    withStrictCodegen {
       val piv = Array((1L, Array(1f, 0f)), (2L, Array(0f, 1f)),
         (3L, Array(1f, 1f)))
       val out = Seq((10L, Seq(2f, 0f)), (11L, Seq(1f, 1f)))
@@ -78,12 +72,6 @@ class CosTopKSpec extends SparkSpec {
           .map(_.getLong(1)).toList).toMap
       assert(out(10L) === List(1L, 3L)) // cos 1.0 to pivot 1, 1/√2 to 3
       assert(out(11L) === List(3L, 2L)) // cos 1.0 to pivot 3; tie 1v2 → 2
-    } finally {
-      conf.set("spark.sql.codegen.fallback", prevFallback)
-      prevExcluded match {
-        case Some(v) => conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => conf.unset("spark.sql.optimizer.excludedRules")
-      }
     }
   }
 }

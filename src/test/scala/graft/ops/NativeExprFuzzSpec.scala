@@ -259,13 +259,7 @@ class NativeExprFuzzSpec extends SparkSpec {
     // constant-folded away before codegen) to make codegen breakage
     // fail loudly.
     import spark.implicits._
-    val conf = spark.conf
-    val prevFallback = conf.get("spark.sql.codegen.fallback")
-    val prevExcluded = conf.getOption("spark.sql.optimizer.excludedRules")
-    try {
-      conf.set("spark.sql.codegen.fallback", "false")
-      conf.set("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    withStrictCodegen {
       val terms = Seq("apple", "é漢", "b")
       val out = Seq("apple b apple", "", "é漢 x é漢", "noterm here")
         .zipWithIndex.map { case (t, i) => (i.toLong, t) }
@@ -276,12 +270,6 @@ class NativeExprFuzzSpec extends SparkSpec {
       assert(out(1L) === Seq(0L, 0L, 0L, 0L))
       assert(out(2L) === Seq(3L, 0L, 2L, 0L))
       assert(out(3L) === Seq(2L, 0L, 0L, 0L))
-    } finally {
-      conf.set("spark.sql.codegen.fallback", prevFallback)
-      prevExcluded match {
-        case Some(v) => conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => conf.unset("spark.sql.optimizer.excludedRules")
-      }
     }
   }
 }

@@ -43,6 +43,31 @@ class PlanSpec extends SparkSpec {
     assert(b === a)
   }
 
+  test("q_ntile_scalable: the range sort follows data size under the production width") {
+    val a = Relational.qNtile(spark, dir).collect().toSeq
+    def show(stages: Seq[graft.Trace.Stage]) =
+      stages.map(s => s"${s.id} ${s.tasks} ${s.name}").mkString("\n")
+    // (a) no stage runs more tasks than cores, though the session's
+    // numShufflePartitions reads 1024
+    val stages = withConf(graft.Session.wideShuffles: _*) {
+      graft.Trace.during(spark) {
+        Relational.qNtileScalable(spark, dir).write.format("noop").mode("overwrite").save()
+      }
+    }
+    val cores = spark.sparkContext.defaultParallelism
+    assert(stages.forall(_.tasks <= cores), show(stages))
+    // (b) coalesced into several ranges, the ranks still equal the twin
+    var b = Seq.empty[org.apache.spark.sql.Row]
+    val small = withConf(graft.Session.wideShuffles ++ Seq(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512b",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "512b"): _*) {
+      graft.Trace.during(spark) { b = Relational.qNtileScalable(spark, dir).collect().toSeq }
+    }
+    val zip = small.filter(_.name.startsWith("zipWithIndex"))
+    assert(zip.nonEmpty && zip.forall(s => s.tasks >= 2 && s.tasks < 1024), show(small))
+    assert(b === a)
+  }
+
   test("dedup candidate joins are hash/merge joins, never cartesian") {
     // every pairwise stage must join on bucket/prefix keys; a refactor
     // that loses the equi-join condition degrades to a nested-loop

@@ -71,13 +71,7 @@ class PqEncodeSpec extends SparkSpec {
 
   test("PqEncode codegen COMPILES: strict no-fallback run stays correct") {
     import spark.implicits._
-    val conf = spark.conf
-    val prevFallback = conf.get("spark.sql.codegen.fallback")
-    val prevExcluded = conf.getOption("spark.sql.optimizer.excludedRules")
-    try {
-      conf.set("spark.sql.codegen.fallback", "false")
-      conf.set("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    withStrictCodegen {
       // 2 subspaces × 2 codes, hand-checkable: subspace center 1 is
       // farther from (1,0) than center 0, so codes = [0, 1] for a
       // vector aligned with center 0 then center 1
@@ -90,12 +84,6 @@ class PqEncodeSpec extends SparkSpec {
           m = 2, k = 2, ds = 2).as("codes"))
         .collect().head.getSeq[Int](0)
       assert(out === Seq(0, 1))
-    } finally {
-      conf.set("spark.sql.codegen.fallback", prevFallback)
-      prevExcluded match {
-        case Some(v) => conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => conf.unset("spark.sql.optimizer.excludedRules")
-      }
     }
   }
 
