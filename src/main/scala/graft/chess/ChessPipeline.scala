@@ -27,9 +27,10 @@ import org.apache.spark.sql.functions._
   * Scale notes (SURVEY §4): one shuffle for the per-player windows
   * (partition key `name`, and `(name, Event)` — Spark coalesces the
   * finer partitioning into the same exchange), one shuffle to join
-  * stats back on game ID, then the doubling is a narrow union of two
-  * projections. Player skew (bots with millions of games) is handled
-  * by AQE; the final range-sort mirrors the reference's
+  * stats back on game ID, then the doubling is one narrow `Generate`
+  * over that joined frame, so the stats run once per batch, not once
+  * per perspective. Player skew (bots with millions of games) is
+  * handled by AQE; the final range-sort mirrors the reference's
   * sort(DateTime, ID).
   */
 object ChessPipeline {
@@ -56,7 +57,6 @@ object ChessPipeline {
   }
 
   private val ResultRev: Column = {
-    val m = Map("1-0" -> "0-1", "0-1" -> "1-0")
     val c = col("Result")
     when(c === "1-0", "0-1").when(c === "0-1", "1-0").otherwise(c)
   }
@@ -255,36 +255,30 @@ object ChessPipeline {
 
   /** Player-game-role doubling (ingester.py:345-399): one row from
     * White's perspective, one from Black's with every paired column
-    * swapped and the Result reversed. Narrow (union of projections).
+    * swapped and the Result reversed. One pass: `inline` over a
+    * two-element array of perspective structs, a narrow `Generate`.
+    * Not a union of two projections: over an ingest month's cached
+    * games Spark reuses neither branch, so the stats windows,
+    * prior-state joins, pivot and games join would run once per
+    * perspective.
+    *
+    * The array unifies the two structs' field nullability exactly as
+    * a union would, so the output (and sink parquet) schema equals the
+    * union form's.
     */
   def toPlayerGameRole(games: DataFrame): DataFrame = {
     val gameCols = gameColsAll.filter(games.columns.contains(_))
-    def perspective(me: String, opp: String, role: String, result: Column): DataFrame =
-      games.select(gameCols.map(col) ++ Seq(
-        result.as("Result"),
-        lit(role).as("Role_player"),
-        col(me).as("Player"),
-        col(opp).as("Opponent"),
-        col(s"${me}Elo").as("PlayerElo"),
-        col(s"${opp}Elo").as("OpponentElo"),
-        col(s"${me}Elo_max").as("PlayerElo_max"),
-        col(s"${opp}Elo_max").as("OpponentElo_max"),
-        col(s"${me}Elo_max_faced").as("PlayerElo_max_faced"),
-        col(s"${opp}Elo_max_faced").as("OpponentElo_max_faced"),
-        col(s"${me}Title").as("PlayerTitle"),
-        col(s"${opp}Title").as("OpponentTitle"),
-        col(s"${me}Title_flag").as("PlayerTitle_flag"),
-        col(s"${opp}Title_flag").as("OpponentTitle_flag"),
-        col(s"${me}RatingDiff").as("PlayerRatingDiff"),
-        col(s"${opp}RatingDiff").as("OpponentRatingDiff"),
-        col(s"${me}_random").as("Player_random"),
-        col(s"${opp}_random").as("Opponent_random"),
-        col(s"${me}_cum_games_total").as("Player_cum_games_total"),
-        col(s"${opp}_cum_games_total").as("Opponent_cum_games_total"),
-        col(s"${me}_cum_games_type").as("Player_cum_games_type"),
-        col(s"${opp}_cum_games_type").as("Opponent_cum_games_type")): _*)
-    perspective("White", "Black", "White", col("Result"))
-      .unionByName(perspective("Black", "White", "Black", ResultRev))
+    // Player/Opponent pairs in output order: suffix s maps me+s and
+    // opp+s to Player+s and Opponent+s
+    val paired = Seq("", "Elo", "Elo_max", "Elo_max_faced", "Title", "Title_flag",
+      "RatingDiff", "_random", "_cum_games_total", "_cum_games_type")
+    def perspective(me: String, opp: String, result: Column): Column =
+      struct(Seq(result.as("Result"), lit(me).as("Role_player")) ++
+        paired.flatMap(s => Seq(col(me + s).as("Player" + s),
+          col(opp + s).as("Opponent" + s))): _*)
+    games.select(gameCols.map(col) :+ inline(array(
+        perspective("White", "Black", col("Result")),
+        perspective("Black", "White", ResultRev))): _*)
       .withColumn("PlayerElo_bin", graft.functions.binLabel(col("PlayerElo"), 200))
       // reference final sort (ingester.py:404); Role desc keeps the
       // White row first within a game like merge_sorted does

@@ -650,9 +650,9 @@ object Dedup {
     var it = 0
     while (changed && it < maxIter) {
       val und = roundUnd(e, w)
-      val next = smallStar(largeStar(und, w), w).transform(graft.Lineage.cut)
+      val (next, nextCount) =
+        graft.Lineage.cutCounted(smallStar(largeStar(und, w), w))
       graft.Lineage.free(und)
-      val nextCount = next.count()
       changed = nextCount != eCount || next.except(e).count() > 0
       freeCheckpoint(e)
       e = next

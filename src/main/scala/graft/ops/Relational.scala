@@ -383,16 +383,17 @@ object Relational {
   /** A5 analog: role doubling — one input row becomes one row per role
     * with role-dependent column swaps, exactly the reference's
     * White/Black player-game-role explosion (ingester.py:365-418).
-    * Narrow op (union of projections): no shuffle.
+    * One narrow `Generate` over one scan (`inline` of a two-element
+    * struct array, the [[graft.chess.ChessPipeline.toPlayerGameRole]]
+    * shape): no shuffle, and the input is read once, not once per
+    * role.
     */
-  def roleExplode(s: SparkSession, dir: String): DataFrame = {
-    val l = t(s, dir, "lineitem")
-    val a = l.select(col("l_orderkey"), col("l_linenumber"),
-      lit("part").as("role"), col("l_partkey").as("member_id"))
-    val b = l.select(col("l_orderkey"), col("l_linenumber"),
-      lit("supplier").as("role"), col("l_suppkey").as("member_id"))
-    a.unionByName(b).orderBy("l_orderkey", "l_linenumber", "role")
-  }
+  def roleExplode(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_linenumber"), inline(array(
+        struct(lit("part").as("role"), col("l_partkey").as("member_id")),
+        struct(lit("supplier").as("role"), col("l_suppkey").as("member_id")))))
+      .orderBy("l_orderkey", "l_linenumber", "role")
 
   /** A6 analog: running per-entity cumulative counts, total and
     * per-type (reference's cum_games_total / cum_games_type,

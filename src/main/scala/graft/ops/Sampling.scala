@@ -495,13 +495,14 @@ object Sampling {
   private[ops] def exclusiveOffsets(perKey: DataFrame,
       fanout: Long = 4096L): DataFrame = {
     require(fanout >= 2, s"fanout must be >= 2, got $fanout")
-    // checkpoint each level: its frame is consumed by the count, the
+    // checkpoint each level: its frame is consumed by the
     // super-grouping AND the offsets join — without materialization
     // every deeper level would re-run the whole chain below it once
     // per consumer (each level is ~1/fanout the previous one's size,
-    // so the materialization cost telescopes)
-    val pk = perKey.transform(graft.Lineage.cut)
-    if (pk.count() <= fanout) {
+    // so the materialization cost telescopes). The counted cut hands
+    // back the level's key count its persist already computed.
+    val (pk, keys) = graft.Lineage.cutCounted(perKey)
+    if (keys <= fanout) {
       // at most `fanout` rows remain: explicit single-slice running
       // sum via a typed mapPartitions over the sorted rows — the same
       // execution shape an unpartitioned window would use, WITHOUT

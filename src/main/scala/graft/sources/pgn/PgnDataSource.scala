@@ -77,7 +77,13 @@ object PgnTable {
   }
 }
 
-class PgnTable(paths: Seq[String]) extends Table with SupportsRead {
+/** Equal over its paths, as Spark's built-in file tables are: two
+  * identical `load(p)` reads then match, so a `.cache()` on one is
+  * used by the other and identical exchanges over one uncached read
+  * are reused. As with those tables, a cached read does not see files
+  * written under its paths later: unpersist it first.
+  */
+case class PgnTable(paths: Seq[String]) extends Table with SupportsRead {
   override def name(): String = s"pgn(${paths.mkString(",")})"
   override def schema(): StructType = PgnTable.Schema
   override def capabilities(): util.Set[TableCapability] =
@@ -139,7 +145,10 @@ object PgnPlanner {
   }
 }
 
-class PgnScanBuilder(paths: Seq[String], options: Map[String, String])
+/** Equal over (paths, options), so `BatchScanExec`s of two identical
+  * reads compare equal (see [[PgnTable]]).
+  */
+case class PgnScanBuilder(paths: Seq[String], options: Map[String, String])
     extends ScanBuilder with Scan with Batch {
   override def build(): Scan = this
   override def readSchema(): StructType = PgnTable.Schema

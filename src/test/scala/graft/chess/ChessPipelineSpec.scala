@@ -2,16 +2,19 @@ package graft.chess
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.UnionExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-class ChessPipelineSpec extends SparkSpec {
+class ChessPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Four hand-crafted games with known stats. alice plays 3 games
     * (2 Blitz, 1 Bullet), bob 2, carol 2, dave 1.
     */
-  private lazy val raw: DataFrame = {
+  private lazy val pgnDir: String = {
     val d = Files.createTempDirectory("pgn_pipe")
     val pgn =
       """[Event "Rated Blitz game"]
@@ -88,8 +91,10 @@ class ChessPipelineSpec extends SparkSpec {
         |1. e4 c5 2. Nf3 1-0
         |""".stripMargin
     Files.writeString(d.resolve("t.pgn"), pgn)
-    spark.read.format("pgn").load(d.toString)
+    d.toString
   }
+
+  private lazy val raw: DataFrame = spark.read.format("pgn").load(pgnDir)
 
   private lazy val games = ChessPipeline.parseGames(raw)
   private lazy val pgr = ChessPipeline.fromPgn(raw)
@@ -252,6 +257,155 @@ class ChessPipelineSpec extends SparkSpec {
     val a = incremental.select(cols: _*).orderBy("ID", "Role_player").collect()
     val b = full.select(cols: _*).orderBy("ID", "Role_player").collect()
     assert(a.toSeq === b.toSeq)
+  }
+
+  /** The role doubling as a union of two projections, the shape
+    * [[ChessPipeline.toPlayerGameRole]] replaced: kept here as the
+    * reference its one-pass output must equal, schema and rows.
+    */
+  private def unionRoles(games: DataFrame): DataFrame = {
+    val gameCols = Seq("ID", "ID_random", "Event", "Tournament", "ECO",
+      "Opening", "TimeControl", "Termination", "DateTime", "Moves",
+      "Evaluation_flag").filter(games.columns.contains(_))
+    val resultRev = when(col("Result") === "1-0", "0-1")
+      .when(col("Result") === "0-1", "1-0").otherwise(col("Result"))
+    def perspective(me: String, opp: String, result: Column): DataFrame =
+      games.select(gameCols.map(col) ++ Seq(
+        result.as("Result"),
+        lit(me).as("Role_player"),
+        col(me).as("Player"),
+        col(opp).as("Opponent"),
+        col(s"${me}Elo").as("PlayerElo"),
+        col(s"${opp}Elo").as("OpponentElo"),
+        col(s"${me}Elo_max").as("PlayerElo_max"),
+        col(s"${opp}Elo_max").as("OpponentElo_max"),
+        col(s"${me}Elo_max_faced").as("PlayerElo_max_faced"),
+        col(s"${opp}Elo_max_faced").as("OpponentElo_max_faced"),
+        col(s"${me}Title").as("PlayerTitle"),
+        col(s"${opp}Title").as("OpponentTitle"),
+        col(s"${me}Title_flag").as("PlayerTitle_flag"),
+        col(s"${opp}Title_flag").as("OpponentTitle_flag"),
+        col(s"${me}RatingDiff").as("PlayerRatingDiff"),
+        col(s"${opp}RatingDiff").as("OpponentRatingDiff"),
+        col(s"${me}_random").as("Player_random"),
+        col(s"${opp}_random").as("Opponent_random"),
+        col(s"${me}_cum_games_total").as("Player_cum_games_total"),
+        col(s"${opp}_cum_games_total").as("Opponent_cum_games_total"),
+        col(s"${me}_cum_games_type").as("Player_cum_games_type"),
+        col(s"${opp}_cum_games_type").as("Opponent_cum_games_type")): _*)
+    perspective("White", "Black", col("Result"))
+      .unionByName(perspective("Black", "White", resultRev))
+      .withColumn("PlayerElo_bin", graft.functions.binLabel(col("PlayerElo"), 200))
+      .orderBy(col("DateTime"), col("ID"), col("Role_player").desc)
+  }
+
+  /** Three games beside the four-game fixture: a missing White tag (a
+    * null player name, twice, across both days of the split below),
+    * a missing Black tag, `?` Elos, a `?` Event and an unfinished
+    * `*` result.
+    */
+  private lazy val oddDir: String = {
+    val d = Files.createTempDirectory("pgn_odd")
+    Files.writeString(d.resolve("odd.pgn"),
+      """[Event "?"]
+        |[Site "https://lichess.org/o1"]
+        |[Black "bob"]
+        |[Result "0-1"]
+        |[UTCDate "2024.03.01"]
+        |[UTCTime "12:00:00"]
+        |[WhiteElo "?"]
+        |[BlackElo "1610"]
+        |
+        |1. f3 e5 2. g4 Qh4# 0-1
+        |
+        |[Event "Rated Blitz game"]
+        |[Site "https://lichess.org/o2"]
+        |[White "erin"]
+        |[Result "*"]
+        |[UTCDate "2024.03.02"]
+        |[UTCTime "12:00:00"]
+        |[WhiteElo "1800"]
+        |[BlackElo "?"]
+        |[WhiteTitle "FM"]
+        |
+        |1. d4 *
+        |
+        |[Event "Rated Blitz game"]
+        |[Site "https://lichess.org/o3"]
+        |[Black "erin"]
+        |[Result "1-0"]
+        |[UTCDate "2024.03.02"]
+        |[UTCTime "13:00:00"]
+        |[WhiteElo "?"]
+        |[BlackElo "1790"]
+        |
+        |1. e4 e5 1-0
+        |""".stripMargin)
+    d.toString
+  }
+
+  test("one-pass role doubling equals the union form: schema and rows, with and without prior") {
+    val g = ChessPipeline.parseGames(spark.read.format("pgn").load(pgnDir, oddDir))
+    val b1 = g.filter(col("DateTime") < "2024-03-02")
+    val b2 = g.filter(col("DateTime") >= "2024-03-02")
+    val prior = ChessPipeline.statsState(b1)
+    for ((label, stats) <- Seq(
+        "no prior" -> ChessPipeline.withStats(g),
+        "prior" -> ChessPipeline.withStats(b2, Some(prior)))) {
+      val one = ChessPipeline.toPlayerGameRole(stats)
+      val two = unionRoles(stats)
+      assert(one.schema === two.schema, s"$label: schema differs")
+      assert(one.schema.map(_.nullable) === two.schema.map(_.nullable), label)
+      val rows = one.collect().toSeq
+      assert(rows === two.collect().toSeq, s"$label: rows differ")
+      assert(rows.exists(_.getAs[String]("Player") == null), s"$label: no null name")
+      assert(rows.exists(_.getAs[Any]("PlayerElo") == null), s"$label: no '?' Elo")
+    }
+  }
+
+  test("one-pass role doubling writes the union form's parquet schema") {
+    // a sink the union form wrote keeps one schema when later months
+    // append: compare the footers (parquet types and repetition) and
+    // the Spark row schema Spark stamps into them (nullability)
+    def footer(df: DataFrame): (String, String) = {
+      val out = Files.createTempDirectory("pgr_schema").toString
+      ChessPipeline.writePartitioned(df, out)
+      val part = new java.io.File(out, "year_month=2024_03").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.toString),
+        spark.sessionState.newHadoopConf())
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        (meta.getSchema.toString,
+          meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      } finally reader.close()
+    }
+    val stats = ChessPipeline.withStats(
+      ChessPipeline.parseGames(spark.read.format("pgn").load(pgnDir, oddDir)))
+    assert(footer(ChessPipeline.toPlayerGameRole(stats)) === footer(unionRoles(stats)))
+  }
+
+  test("role doubling over cached games plans the stats once: two windows, no union") {
+    // games built the way IngestCore builds them: a pgn read, parsed
+    // and cached, plus a prior state read back from parquet. The union
+    // form planned its whole input twice here (four windows): neither
+    // the cached relation nor AQE's exchange reuse shares the branches
+    val stateDir = Files.createTempDirectory("pgr_prior").toString
+    ChessPipeline.statsState(ChessPipeline.parseGames(raw))
+      .write.mode("overwrite").parquet(stateDir)
+    val prior = spark.read.parquet(stateDir)
+    val g = ChessPipeline.parseGames(spark.read.format("pgn").load(pgnDir)).cache()
+    try {
+      val df = ChessPipeline.toPlayerGameRole(ChessPipeline.withStats(g, Some(prior)))
+      assert(df.collect().length === 8) // AQE finalizes stages at execution
+      val plan = df.queryExecution.executedPlan
+      val windows = collect(plan) { case w: WindowExec => w }
+      val unions = collect(plan) { case u: UnionExec => u }
+      assert(windows.size === 2, s"${windows.size} windows:\n$plan")
+      assert(unions.isEmpty, s"union in the doubling:\n$plan")
+    } finally g.unpersist()
   }
 
   test("partitioned sorted sink writes month partitions") {

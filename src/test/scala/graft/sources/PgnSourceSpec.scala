@@ -3,11 +3,14 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPOutputStream
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.chess.SamplePgn
 
-class PgnSourceSpec extends SparkSpec {
+class PgnSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private lazy val dir = SamplePgn.ensureWritten() // 4 files x 50 games
 
@@ -37,6 +40,32 @@ class PgnSourceSpec extends SparkSpec {
         .collect().map(_.getString(0)).toSeq
       assert(sliced === whole, s"splitSize=$split")
     }
+  }
+
+  test("identical reads compare equal: a cache on one read serves the next") {
+    val first = spark.read.format("pgn").load(dir).cache()
+    try {
+      assert(first.count() === 200)
+      val second = spark.read.format("pgn").load(dir)
+      assert(second.queryExecution.withCachedData
+        .collectFirst { case r: InMemoryRelation => r }.nonEmpty,
+        "second read missed the first read's cache")
+      // a different option is a different scan: no match
+      val split = spark.read.format("pgn").option("pgn.splitSize", "500").load(dir)
+      assert(split.queryExecution.withCachedData
+        .collectFirst { case r: InMemoryRelation => r }.isEmpty)
+    } finally first.unpersist()
+  }
+
+  test("identical exchanges over one uncached read are reused") {
+    def perEvent = spark.read.format("pgn").load(dir)
+      .groupBy(element_at(col("tags"), "Event").as("event")).count()
+    val both = perEvent.union(perEvent)
+    assert(both.collect().map(_.getLong(1)).sum === 400)
+    val reused = collect(both.queryExecution.executedPlan) {
+      case r: ReusedExchangeExec => r
+    }
+    assert(reused.size === 1, s"\n${both.queryExecution.executedPlan}")
   }
 
   test("tiny splits produce many partitions (scale-out shape)") {
