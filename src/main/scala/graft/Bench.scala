@@ -1,5 +1,4 @@
 package graft
-import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
@@ -69,52 +68,60 @@ object Bench {
     // tracked at sf1/sf10 instead of only in the single-sample tail
     "text_quality_classifier_heldout")
 
-  /** Wall seconds of `body`. */
-  private def timed(body: => Unit): Double = {
-    val t0 = System.nanoTime()
-    body
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** One full ingest pass for the `pgn_ingest` bench entry: 20k
+  /** One attempt at a bench entry: by default the registered query
+    * into the noop sink. `pgn_ingest` is one full ingest pass — 20k
     * sample games through parse → withStats → role doubling → the
     * range-partitioned sink, written to a throwaway dir (a real
-    * parquet write — the sink IS part of the measured workload).
+    * parquet write: the sink IS part of the measured workload); the
+    * sample corpus write and the dir's delete stay outside the timed
+    * span. `graph_audit`'s counts ARE its materialization (each rider
+    * runs through an action inside graphAudit).
     */
-  private def ingestOnce(spark: SparkSession): Double = {
-    import graft.chess.{ChessPipeline, SamplePgn}
-    val src = SamplePgn.ensureWritten(nFiles = 8, gamesPerFile = 2500)
-    val out = java.nio.file.Files.createTempDirectory("bench_ingest")
-    try timed {
-      ChessPipeline.writePartitioned(
-        ChessPipeline.toPlayerGameRole(ChessPipeline.withStats(
-          ChessPipeline.parseGames(spark.read.format("pgn").load(src)))),
-        out.toString)
-    } finally
-      // don't bloat /tmp across the timed+warm-up runs — including
-      // a failed one's partial write
-      LocalFs.deleteRecursively(out)
-  }
+  private def once(spark: SparkSession, sfDir: String, name: String): Runner.Attempt =
+    name match {
+      case "pgn_ingest" =>
+        import graft.chess.{ChessPipeline, SamplePgn}
+        val src = SamplePgn.ensureWritten(nFiles = 8, gamesPerFile = 2500)
+        val out = java.nio.file.Files.createTempDirectory("bench_ingest")
+        try Runner.attempt(spark, "bench", name) {
+          ChessPipeline.writePartitioned(
+            ChessPipeline.toPlayerGameRole(ChessPipeline.withStats(
+              ChessPipeline.parseGames(spark.read.format("pgn").load(src)))),
+            out.toString)
+        } finally
+          // don't bloat /tmp across the timed+warm-up runs — including
+          // a failed one's partial write
+          LocalFs.deleteRecursively(out)
+      case "graph_audit" =>
+        Runner.attempt(spark, "bench", name)(Pipeline.graphAudit(spark, sfDir))
+      case _ =>
+        Runner.attempt(spark, "bench", name)(SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save())
+    }
 
-  /** The default bench action: the registered query into the noop sink. */
-  private def noopWrite(name: String)(spark: SparkSession, sfDir: String): Double =
-    timed(SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
+  /** The -1 entry of a query with no successful sample. */
+  private val Missing = Runner.Attempt(-1.0, -1.0, -1.0, Nil, None)
 
-  /** Bench entries that are not a [[noopWrite]], each returning its
-    * timed wall seconds.
-    */
-  private val actions: Map[String, (SparkSession, String) => Double] = Map(
-    "pgn_ingest" -> ((spark, _) => ingestOnce(spark)),
-    // the audit's counts ARE its materialization (each rider runs
-    // through an action inside graphAudit)
-    "graph_audit" -> ((spark, sfDir) => timed(Pipeline.graphAudit(spark, sfDir))))
-
-  /** (wall, processCpu, gcTime) in seconds for one sample. */
-  private final case class Sample(wall: Double, cpu: Double, gc: Double)
+  /** An integer env setting, or usage exit 2 when it does not parse. */
+  private def intEnv(key: String, default: Int): Int =
+    sys.env.get(key).fold(default)(v => v.toIntOption.getOrElse {
+      System.err.println(s"[bench] $key must be an integer, got '$v'")
+      sys.exit(2)
+    })
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // huge-SF tiers (sf100) run ONE timed pass with no warm-up — a
+    // 2-3 h single pass can't afford 4x, and at that scale per-query
+    // JIT noise is a rounding error against multi-minute queries —
+    // over an explicit subset (the ladder-relevant heavies + linear
+    // controls; a full sf100 headline pass is ~2.5 h alone)
+    val rounds = intEnv("SPARK_GRAFT_BENCH_ROUNDS", 3)
+    val warmup = intEnv("SPARK_GRAFT_BENCH_WARMUP", 1) > 0
+    val headline = sys.env.get("SPARK_GRAFT_BENCH_QUERIES") match {
+      case Some(qs) => Bench.headline.filter(qs.split(",").toSet)
+      case None => Bench.headline
+    }
     val spark = Session.start()
     // Warm the session (parquet footer reads, codegen of a trivial
     // plan) so the first measured query doesn't pay session init.
@@ -141,79 +148,38 @@ object Bench {
     //      code (compare "cpu" across rounds to separate regression
     //      from noise); GC time exposes heap-pressure drifts that
     //      masquerade as compute regressions (the r5 clusters drift).
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime.max(0L)).sum
-    }
-    def once(name: String): Sample =
-      // every sample rebuilds its plan from scratch, so the
-      // checkpoint blocks it persisted are dead once the sink
-      // finishes OR the attempt throws — sweep both paths, or N
-      // samples x M queries of dead blocks accumulate in one JVM
-      // (the round-5 clusters drift, generalized to every
-      // checkpointing query)
-      try {
-        val c0 = osBean.getProcessCpuTime
-        val g0 = gcMillis()
-        val wall = actions.getOrElse(name, noopWrite(name) _)(spark, sfDir)
-        Sample(wall, (osBean.getProcessCpuTime - c0) / 1e9,
-          (gcMillis() - g0) / 1e3)
-      } finally Caches.sweep(spark)
+    def attempt(name: String) = once(spark, sfDir, name)
 
-    // huge-SF tiers (sf100) run ONE timed pass with no warm-up — a
-    // 2-3 h single pass can't afford 4x, and at that scale per-query
-    // JIT noise is a rounding error against multi-minute queries —
-    // over an explicit subset (the ladder-relevant heavies + linear
-    // controls; a full sf100 headline pass is ~2.5 h alone)
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "3").toInt
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt > 0
-    val headline = sys.env.get("SPARK_GRAFT_BENCH_QUERIES") match {
-      case Some(qs) => Bench.headline.filter(qs.split(",").toSet)
-      case None => Bench.headline
-    }
-
-    def logFailure(what: String, e: Throwable): Unit =
-      System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
-    val failed = scala.collection.mutable.Set.empty[String]
     // warm-up pass (discarded); a query that throws here is reported
     // as -1 and skipped in the timed rounds
-    if (warmup) headline.foreach { name =>
-      try once(name)
-      catch { case NonFatal(e) => logFailure(name, e); failed += name }
-    }
+    val failed = if (warmup) headline.filterNot(n => attempt(n).ok).toSet else Set.empty[String]
     val live = headline.filterNot(failed)
-    val samples = scala.collection.mutable.Map.empty[String, Vector[Sample]]
+    val samples = scala.collection.mutable.Map.empty[String, Vector[Runner.Attempt]]
       .withDefaultValue(Vector.empty)
-    for (r <- 1 to rounds; name <- live)
-      try {
-        val s = once(name)
-        samples(name) = samples(name) :+ s
-        System.err.println(f"[bench] pass $r: $name ${s.wall}%.1fs cpu ${s.cpu}%.1f")
-      } catch { case NonFatal(e) => logFailure(name, e) }
+    def sample(name: String): Runner.Attempt = {
+      val a = attempt(name)
+      if (a.ok) samples(name) = samples(name) :+ a
+      a
+    }
+    for (r <- 1 to rounds; name <- live) {
+      val a = sample(name)
+      if (a.ok) System.err.println(f"[bench] pass $r: $name ${a.wall}%.1fs cpu ${a.cpu}%.1f")
+    }
     // queries still noisy after interleaving get up to 2 extra samples
-    for (name <- live) {
-      var extra = 0
-      while (samples(name).nonEmpty &&
-          samples(name).map(_.wall).max > 3 * samples(name).map(_.wall).min &&
-          extra < 2) {
-        try samples(name) = samples(name) :+ once(name)
-        catch { case NonFatal(e) => logFailure(name, e) }
-        extra += 1
-      }
+    for (name <- live; _ <- 1 to 2) {
+      val walls = samples(name).map(_.wall)
+      if (walls.nonEmpty && walls.max > 3 * walls.min) sample(name)
     }
 
-    val results: Seq[(String, Sample, Vector[Sample])] = headline.map { name =>
-      val ss = samples(name)
-      if (ss.isEmpty) (name, Sample(-1.0, -1.0, -1.0), Vector.empty)
-      else (name, ss.minBy(_.wall), ss)
-    }
-    def field(f: Sample => Double): String =
+    val results: Seq[(String, Runner.Attempt, Vector[Runner.Attempt])] =
+      headline.map { name =>
+        val ss = samples(name)
+        (name, if (ss.isEmpty) Missing else ss.minBy(_.wall), ss)
+      }
+    def field(f: Runner.Attempt => Double): String =
       results.map { case (k, best, _) => f""""$k":${f(best)}%.3f""" }
         .mkString("{", ",", "}")
-    def rawField(f: Sample => Double): String =
+    def rawField(f: Runner.Attempt => Double): String =
       results.map { case (k, _, ss) =>
         s""""$k":${ss.map(s => f"${f(s)}%.3f").mkString("[", ",", "]")}"""
       }.mkString("{", ",", "}")
@@ -233,23 +199,23 @@ object Bench {
       val tail = SparkEntry.queries.keys.toSeq.sorted
         .filterNot(headline.contains)
       val entries = tail.map { name =>
-        val s = try once(name) catch {
-          case NonFatal(e) => logFailure(s"full: $name", e); Sample(-1.0, -1.0, -1.0)
-        }
+        val s = Some(attempt(name)).filter(_.ok).getOrElse(Missing)
         System.err.println(f"[bench] full: $name ${s.wall}%.2fs cpu ${s.cpu}%.2f")
         f""""$name":[${s.wall}%.3f,${s.cpu}%.3f,${s.gc}%.3f]"""
       }
       s""","full":${entries.mkString("{", ",", "}")}"""
     }
-    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpu_total":$totalCpu%.3f,"queries":${field(_.wall)},"cpu":${field(_.cpu)},"gc":${field(_.gc)},"runs":${rawField(_.wall)},"cpu_runs":${rawField(_.cpu)},"gc_runs":${rawField(_.gc)},"order":$order$fullJson,"sf":"$sfDir"}"""
+    val totals = f""""metric":"total","value":$total%.3f,"unit":"sec","cpu_total":$totalCpu%.3f"""
+    val best = s""""queries":${field(_.wall)},"cpu":${field(_.cpu)},"gc":${field(_.gc)}"""
+    val sf = s""""sf":"$sfDir""""
+    val json = s"""{$totals,$best,"runs":${rawField(_.wall)},"cpu_runs":${rawField(_.cpu)},"gc_runs":${rawField(_.gc)},"order":$order$fullJson,$sf}"""
     // Stdout gets ONLY the compact summary line (metric/value/queries/
     // cpu — the driver contract), ~2 KB. The driver's capture keeps a
     // bounded TAIL of stdout; r13 and r14 both shipped `parsed: null`
     // because the detail line (runs/cpu_runs/gc_runs/--full arrays,
     // tens of KB) had its HEAD cut by that bound. The full detail
     // lives in the durable file below, where it always did.
-    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpu_total":$totalCpu%.3f,"queries":${field(_.wall)},"cpu":${field(_.cpu)},"gc":${field(_.gc)},"sf":"$sfDir"}"""
-    println(compact)
+    println(s"{$totals,$best,$sf}")
     // FINAL stdout line is a minimal record (<120 bytes): the driver
     // keeps only the last 2,000 bytes of stdout, and the compact line
     // above grew past that bound (r13–r15 all shipped `parsed: null`,
@@ -257,17 +223,15 @@ object Bench {
     // complete parseable JSON line regardless of how many queries the
     // headline set grows to; per-query detail stays in the compact
     // line and the durable file.
-    val minimal = f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpu_total":$totalCpu%.3f,"sf":"$sfDir"}"""
-    println(minimal)
+    println(s"{$totals,$sf}")
     // Durable twin with the per-sample detail (VERDICT r8 item 7: the
     // driver's BENCH_r08 capture truncated to 6 of 23 queries — the
     // committed file makes the per-query record survive a lossy
     // capture). Path overridable so ad-hoc runs don't clobber the
-    // round record.
+    // round record; a failed write fails the run, after both stdout
+    // lines are out.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-    catch { case e: Exception =>
-      System.err.println(s"[bench] could not write $out: ${e.getMessage}") }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     spark.stop()
   }
 }

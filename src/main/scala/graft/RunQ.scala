@@ -63,31 +63,23 @@ object RunQ {
     val sqlMetric = sys.env.get("SPARK_GRAFT_SQLMETRIC")
     var lastExecId = -1L
     for (name <- args.tail) {
-      val t0 = System.nanoTime()
-      val trace = if (stages) Some(Trace.start(spark)) else None
-      try {
+      val a = Runner.attempt(spark, "runq", name, trace = stages) {
         val df = SparkEntry.queries(name)(spark, sfDir)
         if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) df.explain("formatted")
         // noop sink: forces full materialization of every column
         // (count() would let Catalyst prune the expensive projections).
         df.write.format("noop").mode("overwrite").save()
-        println(f"[runq] $name: materialized in ${(System.nanoTime() - t0) / 1e9}%.1fs")
         if (sys.env.contains("SPARK_GRAFT_SHOW")) df.show(5, 80)
-      } catch { case scala.util.control.NonFatal(e) =>
-        println(s"[runq] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        e.getStackTrace.take(10).foreach(f => println(s"   at $f"))
-        Option(e.getCause).foreach(c =>
-          println(s"   cause: ${c.getClass.getName}: ${c.getMessage}"))
-      } finally {
-        // read (and ADVANCE past) this query's SQL executions in the
-        // finally block: a FAILed query's executions must not leak into
-        // the next query's sqlmetric window (r13 review finding). One
-        // read serves both instruments, so the watermark advances once.
-        // The read is a status-store query that can itself throw; an
-        // exception HERE would replace the query's own failure and
-        // abort the remaining loop — instruments log and continue
-        // (ADVICE r14)
-        try if (planMetrics || sqlMetric.isDefined) {
+      }
+      if (a.ok) println(f"[runq] $name: materialized in ${a.wall}%.1fs")
+      // read (and ADVANCE past) this query's SQL executions whether or
+      // not it failed: a failed query's executions must not leak into
+      // the next query's sqlmetric window (r13 review finding). One
+      // read serves both instruments, so the watermark advances once.
+      // The read is a status-store query that can itself throw; as its
+      // own attempt it logs and the remaining queries still run.
+      if (planMetrics || sqlMetric.isDefined)
+        Runner.attempt(spark, "runq", s"$name instrument read") {
           GraftSqlShim.flushListeners(spark)
           val (maxId, nodes) = GraftSqlShim.planMetricsSince(spark, lastExecId)
           lastExecId = maxId
@@ -104,22 +96,8 @@ object RunQ {
             }.sum
             println(s"""[runq] $name sqlmetric "$m": $v""")
           }
-        } catch { case scala.util.control.NonFatal(e) =>
-          // NonFatal only (ADVICE r15): an OutOfMemoryError or
-          // LinkageError raised while reading the status store means
-          // the JVM is corrupt — aborting beats silently tainting the
-          // remaining queries' timings
-          println(s"[runq] $name instrument read failed: " +
-            s"${e.getClass.getName}: ${e.getMessage}")
         }
-        try trace.foreach(t => dumpStages(name, t.stop()))
-        catch { case scala.util.control.NonFatal(e) =>
-          println(s"[runq] $name stage dump failed: " +
-            s"${e.getClass.getName}: ${e.getMessage}")
-        }
-        // failed or not, the query's checkpoints are dead post-attempt
-        Caches.sweep(spark)
-      }
+      if (stages) dumpStages(name, a.stages)
     }
     spark.stop()
   }

@@ -7,10 +7,31 @@ import org.apache.spark.sql.SparkSession
   * `local[n]` with n = `SPARK_GRAFT_CPUS` (default: this machine's
   * available processors), mirrored into `spark.sql.shuffle.partitions`
   * when it is a number (`*` is a valid local master but not a
-  * partition count). Specs keep their own smaller config
-  * (`SparkSpec`), because they pin plan shapes under it.
+  * partition count). Specs keep their own smaller master and width
+  * (`SparkSpec`), because they pin plan shapes under it, and share
+  * [[common]].
   */
 object Session {
+
+  /** The confs every session applies, the specs' session included.
+    * [[wideShuffles]] and the 64m adaptive broadcast threshold are
+    * production-only: specs that depend on them opt in with
+    * `withConf`, as the task-count guards do.
+    */
+  val common: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    // typed-Aggregator plans (TopKAgg and friends) fall back to
+    // SORT-BASED aggregation past 128 distinct keys per task by
+    // default — the per-task candidate stream then gets fully
+    // sorted, the exact cost the O(k)-state aggregators exist to
+    // avoid (found by the r13 knnskew probe: the hot Voronoi task
+    // sorted 2e8 rows). 128k keys x O(k) state is a few tens of MB.
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "131072",
+    // `events.ts` is TIMESTAMP(NANOS) parquet, which Spark reads
+    // only under this flag, as raw longs ([[Tables.events]] converts
+    // them, and sets the flag itself for sessions built elsewhere)
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false")
 
   /** AQE's shuffle sizing. Specs that guard task counts run under it
     * too, since their own session leaves it unset.
@@ -45,14 +66,7 @@ object Session {
     val builder0 = SparkSession.builder().master(s"local[$cpus]")
     val builder = cpus.toIntOption.fold(builder0)(n =>
       builder0.config("spark.sql.shuffle.partitions", n))
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed-Aggregator plans (TopKAgg and friends) fall back to
-      // SORT-BASED aggregation past 128 distinct keys per task by
-      // default — the per-task candidate stream then gets fully
-      // sorted, the exact cost the O(k)-state aggregators exist to
-      // avoid (found by the r13 knnskew probe: the hot Voronoi task
-      // sorted 2e8 rows). 128k keys x O(k) state is a few tens of MB.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
+      .config(common.toMap)
       .config(wideShuffles.toMap)
       // let AQE convert a sort-merge join to broadcast-hash when the
       // RUNTIME build side lands under 64 MB (the default 10 MB left
@@ -62,11 +76,6 @@ object Session {
       // so ONLY the adaptive threshold moves; the static 10 MB default
       // stays (it guards against estimate-driven giant broadcasts).
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      // `events.ts` is TIMESTAMP(NANOS) parquet, which Spark reads
-      // only under this flag, as raw longs ([[Tables.events]] converts
-      // them, and sets the flag itself for sessions built elsewhere)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     val spark = overrides.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)

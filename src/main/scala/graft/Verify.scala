@@ -4,32 +4,27 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args.take(2)
     // dev convenience: trailing args restrict the dump to named
     // queries (the driver always calls with exactly two args)
-    val only = args.drop(2).toSet
+    val (sfDir, outDir, only) = args match {
+      case Array(sf, out, names @ _*) => (sf, out, names.toSet)
+      case _ =>
+        System.err.println("usage: runMain graft.Verify <sfDir> <outDir> [query ...]")
+        sys.exit(2)
+    }
     val spark = Session.start()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
         // coalesce(1) (narrow) keeps the final ORDER BY intact; the
         // sort's range-exchange above it still runs parallel.
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(f"[verify] $name ok (${(System.nanoTime() - t0) / 1e9}%.1fs)")
+        val a = Runner.attempt(spark, "verify", name) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
+        if (a.ok) System.err.println(f"[verify] $name ok (${a.wall}%.1fs)")
       }
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-        e.getStackTrace.take(5).foreach(f => System.err.println(s"[verify]   at $f"))
-      }
-      // the query is done either way (result on disk, or abandoned):
-      // its checkpoint blocks are dead — keep the 79-query session's
-      // memory flat on the failure path too
-      finally Caches.sweep(spark)
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -86,8 +86,8 @@ object Bpe {
     * ([[graft.Lineage.cutHard]]) that truncates RDD lineage too: the
     * default cut keeps a recomputable RDD chain, and at production
     * merge counts (~300+) that chain's recursive task
-    * deserialization overflows the stack (found by `graft.BpeProbe`
-    * at 500 merges, round 10 — SURVEY §8).
+    * deserialization overflows the stack (found at 500 merges, round
+    * 10 — SURVEY §8; BpeSpec trains past two caps to pin it).
     */
   val RddChainCap = 64
 

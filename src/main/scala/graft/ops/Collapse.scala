@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   *    OptimizeSkewedJoin carves the hot key's partition into chunks
   *    and replicates the single matching rep row to each.
   *
-  * The plan guard (CollapseSkewSpec) pins the family's plans free of
-  * WindowExec; the viral-corpus probe (`graft.Scale viral`) measures
-  * the straggler bound this buys.
+  * CollapseSkewSpec pins the family's plans free of WindowExec and
+  * bounds the straggler ratio this buys on a 1e6-copy viral corpus
+  * and a 1e6-copy viral batch.
   */
 private[graft] object Collapse {
 

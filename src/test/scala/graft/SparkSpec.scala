@@ -44,16 +44,7 @@ object SparkSpec {
     val s = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // typed-Aggregator plans (TopKAgg and friends) fall back to
-      // SORT-BASED aggregation past 128 distinct keys per task by
-      // default — the per-task candidate stream then gets fully
-      // sorted, the exact cost the O(k)-state aggregators exist to
-      // avoid (found by the r13 knnskew probe: the hot Voronoi task
-      // sorted 2e8 rows). 128k keys x O(k) state is a few tens of MB.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      .config(Session.common.toMap)
       .appName("graft-spec")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -88,7 +88,7 @@ class BpeSpec extends SparkSpec {
   test("bpe train survives chains past RddChainCap (the 300-round StackOverflow regression)") {
     // the default Lineage.cut keeps RDD lineage; without the periodic
     // cutHard, ~300 accumulated rounds overflow the task-deser stack
-    // (found by BpeProbe at 500 merges). 2·cap + 10 rounds crosses two
+    // (found at 500 merges, SURVEY §8). 2·cap + 10 rounds crosses two
     // hard-cut windows; a vocabulary of random 6-char words over 8
     // letters supplies enough distinct pairs to actually learn them.
     val rng = new scala.util.Random(7)

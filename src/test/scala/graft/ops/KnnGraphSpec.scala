@@ -7,8 +7,9 @@ import graft.functions.cosine
 
 /** D46 (kNN graph): full-coverage probing reproduces the exact graph
   * (brute-force twin with the same fused cosine), default dials give
-  * k true-cosine edges per vector with no self-edges, and the plan
-  * carries no per-vector window (bounded TopKAgg only).
+  * k true-cosine edges per vector with no self-edges, the plan
+  * carries no per-vector window (bounded TopKAgg only), and the
+  * hot-list salt never changes the output.
   */
 class KnnGraphSpec extends SparkSpec {
 
@@ -66,5 +67,48 @@ class KnnGraphSpec extends SparkSpec {
     val plan = Similarity.knnGraph(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"WindowExec in plan:\n$plan")
+  }
+
+  /** One tight ball of `hot` vectors plus gaussian noise up to `total`,
+    * all unique, with the ball on the vec_ids whose `md5("ivf:"||id)`
+    * ranks LARGEST: the hash-pivot selection takes the smallest ranks,
+    * so no pivot lands inside the ball and the whole ball shares one
+    * Voronoi cell, far over [[Similarity.HotFactor]]x the mean.
+    */
+  private def hotCellCorpus(hot: Int, total: Int): String = {
+    val d = java.nio.file.Files.createTempDirectory("knn_hot").toString
+    val ball = spark.range(1L, total + 1L)
+      .select(col("id").as("vec_id"),
+        md5(concat(lit("ivf:"), col("id").cast("string"))).as("hk"))
+      .orderBy(desc("hk")).limit(hot)
+      .select(col("vec_id"), lit(true).as("is_hot"))
+    val dims = (0 until 16).map { k =>
+      when(col("is_hot"), lit(1.0) + lit(0.001) * randn(1000L + k))
+        .otherwise(randn(2000L + k))
+    }
+    spark.range(1L, total + 1L).select(col("id").as("vec_id"))
+      .join(ball, Seq("vec_id"), "left")
+      .withColumn("is_hot", coalesce(col("is_hot"), lit(false)))
+      .select(col("vec_id"), array(dims: _*).cast("array<float>").as("embedding"))
+      .write.parquet(s"$d/embeddings.parquet")
+    d
+  }
+
+  test("hot-list salt: a degenerate Voronoi cell gives the unsalted rows") {
+    // 300 of 1200 vectors in one cell: ⌈√1200⌉ = 35 lists, mean ~34
+    // assigned, so the ball's cell is ~9x the mean
+    val d = hotCellCorpus(hot = 300, total = 1200)
+    def rows(hotSalt: Int) = {
+      val df = Similarity.knnGraph(spark, d, hotSalt = hotSalt)
+      val out = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      (out, df.queryExecution.analyzed.toString.contains("salt"))
+    }
+    val (salted, saltedPlan) = rows(Similarity.HotSalt)
+    val (plain, plainPlan) = rows(1)
+    // non-vacuity: the corpus trips HotFactor, so the salted join ran
+    assert(saltedPlan && !plainPlan)
+    assert(salted.length === 1200 * 5 && plain.length === salted.length)
+    assert(salted.toSet === plain.toSet)
   }
 }

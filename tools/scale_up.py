@@ -12,7 +12,11 @@ dimensions and stay single-copy.
 
 documents/embeddings replicate with identical payloads — every doc
 gains factor-1 exact duplicates, the web-crawl shape the dedup family's
-exact-collapse front-end exists for (same convention as graft.Scale).
+exact-collapse front-end exists for. This is the dup-heavy N× corpus:
+time queries over it with graft.Bench, naming them in
+SPARK_GRAFT_BENCH_QUERIES and pointing SPARK_GRAFT_SF_DIR at out_dir:
+
+  SPARK_GRAFT_SF_DIR=sf1x SPARK_GRAFT_BENCH_QUERIES=dedup_minhash,text_dup_spans sbt "runMain graft.Bench"
 
 Usage: scale_up.py [base_sf_dir] [out_dir] [factor]
 """
