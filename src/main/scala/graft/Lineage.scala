@@ -152,6 +152,23 @@ object Lineage {
     math.max(2L, math.min(math.max(spread, byAdvisory), 1L << 16)).toInt
   }
 
+  /** Whether `rows` rows of about `bytesPerRow` bytes are small enough
+    * to bring whole to the driver: at most the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the bound Spark itself
+    * uses to ship a join side whole; -1, which turns broadcasts off,
+    * turns this off too. The graph loops (connected components,
+    * PageRank) gate on it with the row count their [[cutCounted]]
+    * already returned, so the gate costs no job: below it, one collect
+    * and an in-JVM solve replace a loop whose every round is several
+    * jobs; above it (any cluster-sized graph) the distributed rounds
+    * run unchanged.
+    */
+  def fitsDriver(spark: org.apache.spark.sql.SparkSession, rows: Long,
+      bytesPerRow: Int): Boolean = {
+    val limit = org.apache.spark.sql.GraftSqlShim.broadcastThreshold(spark)
+    limit >= 0 && math.max(rows, 0L) <= limit / bytesPerRow
+  }
+
   /** [[cut]] with the RDD lineage truncated too. The default [[cut]]
     * keeps RDD lineage (recomputable blocks — the safety property),
     * which means a VERY long iterative chain (hundreds of rounds)

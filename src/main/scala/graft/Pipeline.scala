@@ -125,10 +125,12 @@ object Pipeline {
       // One COLLECT for all six rider headlines (r17): each count was
       // its own sequential action, serializing six small jobs at the
       // end of an audit that is latency-bound at sf0.1 (core-ratio
-      // ~1.0, r16 verdict item 2). The iterative riders still run
-      // their loops eagerly while their frames are CONSTRUCTED (the
-      // cuts execute then), but the six final aggregations now share
-      // one job whose independent subtrees the scheduler runs
+      // ~1.0, r16 verdict item 2). The iterative riders cut, count
+      // and (below the broadcast threshold) collect and solve their
+      // graph on the driver while their frames are CONSTRUCTED; only
+      // above Lineage.fitsDriver do they run their distributed loop
+      // rounds eagerly there. The six final aggregations share one
+      // job whose independent subtrees the scheduler runs
       // concurrently. Values are identical by construction — each
       // union leg is exactly the old count/distinct-count.
       val legs: Seq[(String, DataFrame)] = Seq(

@@ -108,10 +108,6 @@ object Dedup {
     */
   private case class ShingleCorpus(docToRep: DataFrame, sets: DataFrame)
 
-  def docSigsPublic(s: SparkSession, dir: String): DataFrame = {
-    val c = shingleCorpus(s, dir); c.sets.join(sigsOf(c.sets), "doc_id")
-  }
-
   private def shingleCorpus(s: SparkSession, dir: String): ShingleCorpus =
     shingleCorpusOf(Tables.load(s, dir, "documents"))
 
@@ -250,26 +246,15 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** 64-bit SimHash per doc via the native one-pass
-    * [[graft.functions.SimHash64]] expression (tokenize + per-token
-    * xxhash64 + ±1 votes + sign fold, row-local — the aggregate
-    * formulation it replaced is kept as [[simhashSqlOf]] and a spec
-    * pins them bit-identical).
-    */
-  def simhashDocsPublic(s: SparkSession, dir: String): DataFrame = {
-    val c = simhashCorpus(s, dir)
-    c.docToRep.join(c.uniq.withColumnRenamed("doc_id", "rep"), "rep")
-      .select("doc_id", "simhash")
-  }
-
   /** Exact-collapsed simhash corpus: identical TEXTS (simhash is over
     * the token stream, not the set) collapse to the smallest doc_id;
-    * votes are aggregated per unique text only.
+    * the 64-bit SimHash is computed per unique text only, by the
+    * native one-pass [[graft.functions.SimHash64]] expression
+    * (tokenize + per-token xxhash64 + ±1 votes + sign fold, row-local
+    * — the aggregate formulation it replaced is kept as
+    * [[simhashSqlOf]] and a spec pins them bit-identical).
     */
   private case class SimhashCorpus(docToRep: DataFrame, uniq: DataFrame)
-
-  private def simhashCorpus(s: SparkSession, dir: String): SimhashCorpus =
-    simhashCorpusOf(Tables.load(s, dir, "documents"))
 
   private def simhashCorpusOf(docs: DataFrame): SimhashCorpus = {
     // No cut on the projection: the digest is one cheap md5 pass, so
@@ -549,7 +534,8 @@ object Dedup {
     * boilerplate chains A~B~C~… are exactly how crawl corpora
     * degenerate). Round-count behavior is spec-pinned against the
     * label-propagation twin, which stays available below for the
-    * comparison.
+    * comparison. An edge list within the broadcast threshold skips
+    * the rounds and is solved on the driver ([[ccAlternatingStar]]).
     */
   private[ops] def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 25): DataFrame =
@@ -624,28 +610,53 @@ object Dedup {
       .dropDuplicates("u", "v")
   }
 
-  /** The alternating-star loop; returns (labels, rounds). At the
+  /** Connected-component labels of `nodes` (id) over `edges` (a, b);
+    * returns (labels, distributed rounds run). The edge list is cut
+    * and counted once; when it fits [[graft.Lineage.fitsDriver]] it is
+    * collected and solved by union-find on the driver
+    * ([[DriverGraph.componentRoots]], 0 rounds) — below the broadcast
+    * threshold every round of the loop is several jobs of pure
+    * scheduling overhead. Above it, the alternating-star loop: at the
     * fixpoint the edge set is a forest of stars rooted at each
     * component's minimum, so labels read straight off the edges.
-    * Per-round frames are Lineage.cut (flat re-analysis per round)
-    * and freed once the convergence check — the round's last reader —
-    * is done (the round-5 bench-drift lesson).
+    * Per-round frames are Lineage.cut and freed once the convergence
+    * check — the round's last reader — is done (the round-5
+    * bench-drift lesson). Either way the roots attach through one
+    * left join, so nodes without an edge label themselves.
     */
   private[ops] def ccAlternatingStar(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 25): (DataFrame, Int) = {
     val spark = nodes.sparkSession
-    val cut0 = graft.Lineage.cutCounted(
+    val (e0, eCount) = graft.Lineage.cutCounted(
       edges.select(col("a").as("u"), col("b").as("v"))
         .filter(col("u") =!= col("v")).distinct())
-    var e = cut0._1
-    var eCount = cut0._2
+    val (roots, rounds) =
+      if (graft.Lineage.fitsDriver(spark, eCount, 16)) {
+        val g = DriverGraph.collect(e0)
+        graft.Lineage.free(e0)
+        (DriverGraph.componentRoots(spark, g), 0)
+      } else starLoop(e0, eCount, maxIter)
+    val labels = nodes.select(col("id"))
+      .join(roots, Seq("id"), "left")
+      .select(col("id"), coalesce(col("root"), col("id")).as("label"))
+    (labels, rounds)
+  }
+
+  /** The distributed alternating-star rounds over the cut, deduped,
+    * self-loop-free edge list `e0` of `eCount` rows; returns each
+    * non-root endpoint's (id, root) and the rounds run.
+    */
+  private def starLoop(e0: DataFrame, eCount0: Long,
+      maxIter: Int): (DataFrame, Int) = {
+    var e = e0
+    var eCount = eCount0
     // one shared scale-adaptive width for every round's star frames
     // (sized from the INITIAL edge list — rounds only shrink it): the
     // cut roots stay plain hash(u, w), so each round's aggregations,
     // joins and dedups — and the convergence except(), an anti join on
     // (u, v) that hash(u) clusters — all co-partition with no extra
     // exchange (guide §2.4; see largeStar)
-    val w = graft.Lineage.loopWidth(spark, 2L * math.max(eCount, 1L), 16)
+    val w = graft.Lineage.loopWidth(e0.sparkSession, 2L * math.max(eCount, 1L), 16)
     var changed = eCount > 0
     var it = 0
     while (changed && it < maxIter) {
@@ -663,11 +674,8 @@ object Dedup {
     // true component into several clusters
     require(!changed,
       s"connected components did not converge in $maxIter rounds")
-    val labels = nodes.select(col("id"))
-      .join(e.groupBy("u").agg(min(col("v")).as("root"))
-        .select(col("u").as("id"), col("root")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("root"), col("id")).as("label"))
-    (labels, it)
+    (e.groupBy("u").agg(min(col("v")).as("root"))
+      .select(col("u").as("id"), col("root")), it)
   }
 
   /** Min-label propagation twin (each node takes the min of its own

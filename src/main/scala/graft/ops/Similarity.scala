@@ -1179,11 +1179,13 @@ object Similarity {
     * smallest vec_id; `cluster_size` rides along.
     *
     * Scale shape: edges are bounded by the graph build (≤ k·n, and
-    * the mutual intersect only shrinks them); components via the
-    * O(log n)-round alternating-star loop shared with [[Dedup]]'s
-    * D4b (per-round frames are Lineage.cut and freed); the size
-    * attach is a groupBy + join-back — a mega-cluster collapses
-    * map-side and splits under AQE, never a cluster-keyed window.
+    * the mutual intersect only shrinks them); components via
+    * [[Dedup]]'s D4b: union-find on the driver when the edge list fits
+    * [[graft.Lineage.fitsDriver]], else the O(log n)-round
+    * alternating-star loop (per-round frames are Lineage.cut and
+    * freed); the size attach is a groupBy + join-back — a
+    * mega-cluster collapses map-side and splits under AQE, never a
+    * cluster-keyed window.
     */
   def semanticClusters(s: SparkSession, dir: String,
       threshold: Double = MutualThreshold, nLists: Int = 0, nProbe: Int = 4): DataFrame =
@@ -1271,6 +1273,11 @@ object Similarity {
     * of a hub vector is a groupBy that collapses map-side) and one
     * partial-aggregated sum per destination; rounds are Lineage.cut
     * and freed like the CC/k-means loops. 10 rounds × O(k·n) edge rows.
+    * A symmetric edge list that fits [[graft.Lineage.fitsDriver]] (16
+    * bytes a row against the broadcast threshold) skips the rounds'
+    * jobs: one collect, then the same 10 integer rounds on the driver
+    * ([[DriverGraph.pageRank]]) — the same rows, since the arithmetic
+    * is exact.
     */
   def pageRank(s: SparkSession, dir: String,
       threshold: Double = MutualThreshold, nLists: Int = 0, nProbe: Int = 4): DataFrame =
@@ -1292,6 +1299,38 @@ object Similarity {
     val (sym, mSym) = graft.Lineage.cutCounted(
       mutual.select(col("a"), col("b"))
         .unionByName(mutual.select(col("b").as("a"), col("a").as("b"))))
+    val n = nodeFrame.select(col("vec_id")).count()
+    // an empty node frame has no mass to share: zero rows, not / by zero
+    val tele = if (n > 0) 15L * PrScale / (100L * n) else 0L
+    val r0 = if (n > 0) PrScale / n else 0L
+    // The rank table iterates over the ACTIVE nodes only (ids with
+    // >= 1 mutual edge): a dangling node receives no contribution and
+    // contributes none, so its rank is the teleport constant after
+    // every round; it is attached ONCE after the rounds instead of
+    // through a full nodes-frame left join per round.
+    val r =
+      if (graft.Lineage.fitsDriver(spark, mSym, 16)) {
+        val g = DriverGraph.collect(sym)
+        graft.Lineage.free(sym)
+        DriverGraph.pageRank(spark, g, tele, r0, PrIters)
+      } else pageRankLoop(sym, mSym, tele, r0)
+    nodeFrame.select(col("vec_id").as("id"))
+      .join(r, Seq("id"), "left")
+      .select(col("id").as("vec_id"),
+        coalesce(col("r"), lit(tele)).as("pr_micro"),
+        round(coalesce(col("r"), lit(tele)).cast("double") / PrScale, 6)
+          .as("pagerank"))
+      .orderBy("vec_id")
+  }
+
+  /** The distributed power iteration over the cut symmetric edge list
+    * `sym` of `mSym` rows (freed here); returns the active nodes'
+    * (id, r) after [[PrIters]] rounds. The symmetric edge list
+    * guarantees every active node receives >= 1 contribution per
+    * round, so `contrib` covers the active set exactly.
+    */
+  private def pageRankLoop(sym: DataFrame, mSym: Long, tele: Long,
+      r0: Long): DataFrame = {
     val deg = sym.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
     // deg is LOOP-INVARIANT: fold it into the edge list once, so each
     // of the PrIters rounds pays ONE rank join instead of two (round
@@ -1306,21 +1345,11 @@ object Similarity {
     // AQE's 1024 initial width EVERY round (r16 §4 negative finding
     // 3: a cut frame's AQE-coalesced width never satisfies the join's
     // co-partition negotiation).
-    val w = graft.Lineage.loopWidth(spark, mSym, 32)
+    val w = graft.Lineage.loopWidth(sym.sparkSession, mSym, 32)
     val symDeg = sym.join(deg.withColumnRenamed("id", "a"), "a")
       .repartition(w, col("a"))
       .transform(graft.Lineage.cut)
-    val n = nodeFrame.select(col("vec_id")).count()
-    val tele = 15L * PrScale / (100L * n)
-    // The rank table iterates over the ACTIVE nodes only (ids with
-    // >= 1 mutual edge — exactly deg's keys): a dangling node receives
-    // no contribution and contributes none, so its rank is the
-    // teleport constant after every round; it is attached ONCE after
-    // the loop instead of through a full nodes-frame left join per
-    // round. The symmetric edge list guarantees every active node
-    // receives >= 1 contribution per round, so `contrib` covers the
-    // active set exactly — same fixed point, row for row.
-    var r = deg.select(col("id"), lit(PrScale / n).as("r"))
+    var r = deg.select(col("id"), lit(r0).as("r"))
       .repartition(w, col("id"))
       .transform(graft.Lineage.cut)
     graft.Lineage.free(sym)
@@ -1341,13 +1370,7 @@ object Similarity {
       r = next
     }
     graft.Lineage.free(symDeg)
-    nodeFrame.select(col("vec_id").as("id"))
-      .join(r, Seq("id"), "left")
-      .select(col("id").as("vec_id"),
-        coalesce(col("r"), lit(tele)).as("pr_micro"),
-        round(coalesce(col("r"), lit(tele)).cast("double") / PrScale, 6)
-          .as("pagerank"))
-      .orderBy("vec_id")
+    r
   }
 
   /** D54: hubness audit of the embedding space — per vector, the

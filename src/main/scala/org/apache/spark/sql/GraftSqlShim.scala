@@ -184,6 +184,13 @@ object GraftSqlShim {
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, as
+    * `SQLConf` parses it (-1 when broadcasts are off) — the bound
+    * [[graft.Lineage.fitsDriver]] gates driver-side graph solves on.
+    */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+
   /** Drain the listener bus — listeners ([[graft.Trace]], the SQL
     * status store) receive events asynchronously, so a reader must
     * flush before totalling. `listenerBus` is `private[spark]`.

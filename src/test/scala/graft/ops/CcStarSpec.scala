@@ -1,15 +1,15 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
 
 /** Round-count and label-equality pins for the alternating-star
   * connected components (round 9): on a chain — the adversarial
   * shape for propagation — the star formulation must converge in
   * O(log n) rounds where min-label propagation needs O(n), and both
-  * must agree on labels everywhere.
+  * must agree on labels everywhere. Every case also runs on the
+  * driver path, which solves these small graphs in 0 rounds.
   */
-class CcStarSpec extends SparkSpec {
+class CcStarSpec extends GraphPaths {
 
   private def chain(n: Int) = {
     import spark.implicits._
@@ -18,10 +18,12 @@ class CcStarSpec extends SparkSpec {
     (nodes, edges)
   }
 
-  test("32-link chain: star converges in O(log n) rounds, labels all 0") {
+  graphTest("32-link chain: star converges in O(log n) rounds, labels all 0") {
     val (nodes, edges) = chain(32)
     val (labels, rounds) = Dedup.ccAlternatingStar(nodes, edges)
-    assert(rounds <= 10, s"alternating star took $rounds rounds on a 32-chain")
+    if (onDriver) assert(rounds === 0)
+    else assert(rounds >= 1 && rounds <= 10,
+      s"alternating star took $rounds rounds on a 32-chain")
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size === 32 && got.values.forall(_ == 0L))
     // the propagation twin needs ~n rounds on the same graph — the
@@ -33,7 +35,7 @@ class CcStarSpec extends SparkSpec {
     assert(pgot === got)
   }
 
-  test("mixed graph: star labels == propagation labels, singletons stay themselves") {
+  graphTest("mixed graph: star labels == propagation labels, singletons stay themselves") {
     import spark.implicits._
     // two components {1,3,5,9} (via 9-3, 3-1, 5-9), {4,7}, singleton 6
     val nodes = Seq(1L, 3L, 4L, 5L, 6L, 7L, 9L).toDF("id")
@@ -46,7 +48,7 @@ class CcStarSpec extends SparkSpec {
     assert(plabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === got)
   }
 
-  test("empty edge set: every node is its own component") {
+  graphTest("empty edge set: every node is its own component") {
     import spark.implicits._
     val nodes = Seq(2L, 8L).toDF("id")
     val edges = Seq.empty[(Long, Long)].toDF("a", "b")

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import graft.{Caches, SparkSpec, Tables}
+import graft.{Caches, Tables}
 
 /** The shared-edges seams of the graph family (round 12): each
   * `*On(edges)` variant fed ONE prebuilt, checkpointed [[Similarity.knnGraph]]
@@ -9,13 +9,14 @@ import graft.{Caches, SparkSpec, Tables}
   * computes by rebuilding the graph itself — so a pipeline (or a
   * Verify/Bench session) can pay the n^1.5 build once for all five
   * riders without any answer drift. [[graft.Pipeline.graphAudit]] is
-  * the chained demonstration; this spec is the equality pin.
+  * the chained demonstration; this spec is the equality pin. The
+  * cases that reach the CC and PageRank loops run on both paths.
   */
-class GraphSeamSpec extends SparkSpec {
+class GraphSeamSpec extends GraphPaths {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("one shared edge build feeds all five riders == self-contained keys") {
+  graphTest("one shared edge build feeds all five riders == self-contained keys") {
     val nodes = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val labels = Tables.load(spark, sf, "embeddings")
@@ -42,7 +43,7 @@ class GraphSeamSpec extends SparkSpec {
     }
   }
 
-  test("shared-mutual seams == their On forms (one mutual derivation, both riders; r16)") {
+  graphTest("shared-mutual seams == their On forms (one mutual derivation, both riders; r16)") {
     val nodes = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val edges = Similarity.knnGraph(spark, sf)
@@ -63,7 +64,7 @@ class GraphSeamSpec extends SparkSpec {
     }
   }
 
-  test("graphAudit: the chained one-build session returns consistent counts") {
+  graphTest("graphAudit: the chained one-build session returns consistent counts") {
     val audit = graft.Pipeline.graphAudit(spark, sf)
     val n = Tables.load(spark, sf, "embeddings").count()
     assert(audit("n_edges") > 0L)
@@ -71,6 +72,31 @@ class GraphSeamSpec extends SparkSpec {
     assert(audit("n_clusters") >= 1L && audit("n_clusters") <= n)
     assert(audit("n_outliers") < n)            // not everything is an outlier
     Caches.sweep(spark)
+  }
+
+  test("mutual riders below the broadcast threshold: a few jobs, no loop rounds") {
+    val nodes = Tables.load(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val edges = Similarity.knnGraph(spark, sf)
+      .transform(graft.Lineage.cut)
+    val mutual = Similarity.mutualEdges(edges, 0.3)
+      .transform(graft.Lineage.cut)
+    try {
+      // building the two frames runs their graph solves: CC's cut
+      // (2 jobs: the dedup shuffle, the persist) and collect, then
+      // PageRank's cut, node count (2) and collect — 7 in all; the
+      // distributed loops take 78 on this graph. Every job runs at
+      // least one stage, so counting stages bounds jobs.
+      val stages = graft.Trace.during(spark) {
+        Similarity.semanticClustersOnMutual(nodes, mutual)
+        Similarity.pageRankOnMutual(nodes, mutual)
+      }
+      assert(stages.size <= 7, stages.map(_.name).mkString("\n"))
+    } finally {
+      graft.Lineage.free(mutual)
+      graft.Lineage.free(edges)
+      Caches.sweep(spark)
+    }
   }
 
   test("knnDensityOn preserves edgeless vectors as density 0 / outlier true") {

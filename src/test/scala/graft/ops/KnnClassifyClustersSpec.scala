@@ -2,7 +2,6 @@ package graft.ops
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
 
 /** Contract pins for D51 (`knn_classify`, kNN majority-vote label
   * propagation) and D52 (`semantic_clusters`, connected components of
@@ -10,11 +9,12 @@ import graft.SparkSpec
   * corpus probed at FULL coverage (nProbe = nLists reproduces the
   * exact graph, so every expectation is hand-computable), plus a
   * re-derivation of the default-dial vote from the engine's own
-  * pinned edge set, and no-window plan guards.
+  * pinned edge set, and no-window plan guards. The cases that reach
+  * the connected-components loop run on both of its paths.
   */
 private case class KnnEmb(vec_id: Long, embedding: Array[Float], label: Int)
 
-class KnnClassifyClustersSpec extends SparkSpec {
+class KnnClassifyClustersSpec extends GraphPaths {
 
   /** Two tight clusters of 6 (cos ≈ 1 within, ≈ 0.01·ε across, all
     * pairwise-distinct): with k = 5 every vector's exact top-5 is the
@@ -71,7 +71,7 @@ class KnnClassifyClustersSpec extends SparkSpec {
     assert(out === expected)
   }
 
-  test("mutual-kNN components: two clusters, then all singletons") {
+  graphTest("mutual-kNN components: two clusters, then all singletons") {
     val out = Similarity.semanticClusters(spark, dir,
         threshold = 0.3, nLists = 16, nProbe = 16).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cluster"),
@@ -89,7 +89,7 @@ class KnnClassifyClustersSpec extends SparkSpec {
       && r.getAs[Long]("cluster_size") === 1L))
   }
 
-  test("plans have no window") {
+  graphTest("plans have no window") {
     val p1 = Similarity.knnClassify(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(!p1.contains("Window"), s"WindowExec in plan:\n$p1")

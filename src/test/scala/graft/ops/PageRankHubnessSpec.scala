@@ -2,18 +2,17 @@ package graft.ops
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
 
 /** Contract pins for D53 (`pagerank`, integer-exact power iteration
   * over the mutual-kNN graph) and D54 (`knn_hubness`, in-degree audit
   * of the directed kNN graph): a hand-computed fixed point on a
   * regular planted graph, a BigInt re-derivation from the engine's
   * own edges at default dials, conservation invariants, and no-window
-  * plan guards.
+  * plan guards. The PageRank cases run on both paths of its loop.
   */
 private case class PrEmb(vec_id: Long, embedding: Array[Float], label: Int)
 
-class PageRankHubnessSpec extends SparkSpec {
+class PageRankHubnessSpec extends GraphPaths {
 
   private val Scale = 1000000000000L
 
@@ -32,7 +31,7 @@ class PageRankHubnessSpec extends SparkSpec {
     d
   }
 
-  test("5-regular planted graph: hand-computed integer fixed point") {
+  graphTest("5-regular planted graph: hand-computed integer fixed point") {
     // n=12: r0 = 1e12/12 = 83333333333; tele = 15e12/1200 = 12500000000.
     // Round 1: per-edge contrib = (85·83333333333) div 500 =
     // 14166666666, ×5 neighbors + tele = 83333333330 — and that value
@@ -46,7 +45,7 @@ class PageRankHubnessSpec extends SparkSpec {
     }
   }
 
-  test("default dials == BigInt re-derivation from the engine's edges") {
+  graphTest("default dials == BigInt re-derivation from the engine's edges") {
     val sf = "/root/testdata/sf0.001"
     val edges = Similarity.knnGraph(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
@@ -73,6 +72,14 @@ class PageRankHubnessSpec extends SparkSpec {
     assert(out.values.forall(_ >= tele.toLong))
   }
 
+  graphTest("empty node frame: zero rows, no division by zero") {
+    import spark.implicits._
+    val nodes = Seq.empty[Long].toDF("vec_id")
+    for (mutual <- Seq(Seq.empty[(Long, Long)], Seq(1L -> 2L)))
+      assert(Similarity.pageRankOnMutual(nodes, mutual.toDF("a", "b"))
+        .collect().isEmpty)
+  }
+
   test("hubness: in-degree conservation, zero rows preserved") {
     // planted regular graph at full coverage: everyone's in-degree is
     // exactly 5 — no hubs, no antihubs
@@ -96,7 +103,7 @@ class PageRankHubnessSpec extends SparkSpec {
     }
   }
 
-  test("plans have no window") {
+  graphTest("plans have no window") {
     val p1 = Similarity.pageRank(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(!p1.contains("Window"), s"WindowExec in plan:\n$p1")
