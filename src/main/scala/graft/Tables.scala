@@ -65,7 +65,9 @@ object Tables {
     * reader rejects outright. Read it via the legacy nanos-as-long conf
     * and normalize: `ts` = microsecond-precision TimestampType (session
     * TZ is pinned to UTC everywhere, so this behaves like the naive
-    * timestamp DuckDB sees), `ts_ns` = raw nanos since epoch.
+    * timestamp DuckDB sees), `ts_ns` = raw nanos since epoch. This is
+    * the only reader of NANOS parquet, so the flag is set here, for any
+    * session, and not in `Session.confs`.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -6,16 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("cosine_sim is callable from SQL when extensions are configured") {
-    // Build a separate session (sharing the JVM's SparkContext) with
-    // the extension installed; never stop() it — that would kill the
-    // context under the suite-wide shared session.
+    // Build a separate session (sharing the JVM's SparkContext) from
+    // the suite session's builder, so the extension is its only
+    // difference; never stop() it — that would kill the context under
+    // the suite-wide shared session.
     val shared = SparkSpec.session
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
+      val spark = Session.builder("4")
         .withExtensions(new GraftExtensions().apply(_))
         .getOrCreate()
       val r = spark.sql(

@@ -88,8 +88,7 @@ class LineageSpec extends SparkSpec {
   test("reliable mode (graft.checkpoint.dir) runs dedup_clusters to the same answer") {
     val default = ops.Dedup.dedupClusters(spark, sf).collect().toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.conf.set(Lineage.ConfKey, dir)
-    try {
+    try withConf(Lineage.ConfKey -> dir) {
       val reliable = ops.Dedup.dedupClusters(spark, sf).collect().toSeq
       assert(reliable === default)
       // the checkpoint actually landed in the configured directory
@@ -97,7 +96,6 @@ class LineageSpec extends SparkSpec {
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, "reliable mode wrote no checkpoint files")
     } finally {
-      spark.conf.unset(Lineage.ConfKey)
       LocalFs.deleteRecursively(java.nio.file.Paths.get(dir))
     }
   }

@@ -64,9 +64,7 @@ class PipelineSpec extends SparkSpec {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     var counts = Map.empty[String, Long]
-    val stages = withConf(Session.wideShuffles: _*) {
-      Trace.during(spark) { counts = Pipeline.run(spark, sf, out) }
-    }
+    val stages = Trace.during(spark) { counts = Pipeline.run(spark, sf, out) }
     assert(counts("n_input") === 500L)
     // the stage cuts and the operators' internal cuts and caches
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }

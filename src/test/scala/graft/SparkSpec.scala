@@ -40,13 +40,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The mains' session config ([[Session.confs]]) at a fixed width of
+    * 4, so spec plans do not depend on the host.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config(Session.common.toMap)
-      .appName("graft-spec")
-      .getOrCreate()
+    val s = Session.builder("4").appName("graft-spec").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

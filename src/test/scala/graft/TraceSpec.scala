@@ -11,11 +11,12 @@ class TraceSpec extends SparkSpec {
   test("during returns every stage's tasks and shuffle bytes, readable at once") {
     // AQE off: it would coalesce the final aggregate's partitions, and
     // the stage shapes below would depend on the data size
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val stages = try Trace.during(spark) {
-      spark.range(0, 10000, 1, 3).repartition(4)
-        .groupBy((col("id") % 10).as("k")).count().collect()
-    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    val stages = withConf("spark.sql.adaptive.enabled" -> "false") {
+      Trace.during(spark) {
+        spark.range(0, 10000, 1, 3).repartition(4)
+          .groupBy((col("id") % 10).as("k")).count().collect()
+      }
+    }
     // range (3 partitions) -> repartition(4) -> partial aggregate ->
     // final aggregate over spark.sql.shuffle.partitions
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt

@@ -64,25 +64,13 @@ class C4LineFilterSpec extends SparkSpec {
 
   test("C4LineFilter codegen COMPILES: strict no-fallback run stays correct") {
     import spark.implicits._
-    val conf = spark.conf
-    val prevFallback = conf.get("spark.sql.codegen.fallback")
-    val prevExcluded = conf.getOption("spark.sql.optimizer.excludedRules")
-    try {
-      conf.set("spark.sql.codegen.fallback", "false")
-      conf.set("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    withStrictCodegen {
       val out = Seq((1L, "keep me now.\ndrop me\nand me too."))
         .toDF("id", "text")
         .select(graft.functions.c4LineFilter(col("text"), 3).as("r"))
         .collect().head.getStruct(0)
       assert(out.getLong(0) === 3L)
       assert(out.getSeq[String](1) === Seq("keep me now.", "and me too."))
-    } finally {
-      conf.set("spark.sql.codegen.fallback", prevFallback)
-      prevExcluded match {
-        case Some(v) => conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => conf.unset("spark.sql.optimizer.excludedRules")
-      }
     }
   }
 }

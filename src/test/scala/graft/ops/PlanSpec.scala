@@ -49,18 +49,16 @@ class PlanSpec extends SparkSpec {
       stages.map(s => s"${s.id} ${s.tasks} ${s.name}").mkString("\n")
     // (a) no stage runs more tasks than cores, though the session's
     // numShufflePartitions reads 1024
-    val stages = withConf(graft.Session.wideShuffles: _*) {
-      graft.Trace.during(spark) {
-        Relational.qNtileScalable(spark, dir).write.format("noop").mode("overwrite").save()
-      }
+    val stages = graft.Trace.during(spark) {
+      Relational.qNtileScalable(spark, dir).write.format("noop").mode("overwrite").save()
     }
     val cores = spark.sparkContext.defaultParallelism
     assert(stages.forall(_.tasks <= cores), show(stages))
     // (b) coalesced into several ranges, the ranks still equal the twin
     var b = Seq.empty[org.apache.spark.sql.Row]
-    val small = withConf(graft.Session.wideShuffles ++ Seq(
+    val small = withConf(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512b",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "512b"): _*) {
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "512b") {
       graft.Trace.during(spark) { b = Relational.qNtileScalable(spark, dir).collect().toSeq }
     }
     val zip = small.filter(_.name.startsWith("zipWithIndex"))
@@ -291,11 +289,9 @@ class PlanSpec extends SparkSpec {
     val wh = java.nio.file.Files.createTempDirectory("graft_bucket_spec").toString
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("value"))
-    val bcThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // disable broadcast: at scale both sides are big — the point of
-      // bucketing is the fact-fact case a broadcast cannot handle
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // disable broadcast: at scale both sides are big — the point of
+    // bucketing is the fact-fact case a broadcast cannot handle
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       ev.write.mode("overwrite")
         .bucketBy(4, "user_id").sortBy("user_id")
         .option("path", s"$wh/ev_a").saveAsTable("ev_a")
@@ -310,7 +306,6 @@ class PlanSpec extends SparkSpec {
       assert(!plan.contains("Exchange"),
         s"bucketed join still shuffles in:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcThreshold)
       spark.sql("DROP TABLE IF EXISTS ev_a")
       spark.sql("DROP TABLE IF EXISTS ev_b")
       // external-table DROP leaves the files; reclaim the temp dir

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Session, SparkSpec, Trace}
+import graft.{SparkSpec, Trace}
 
 /** D47 (CCNet perplexity buckets): the grouped-rank arithmetic must
   * equal SQL ntile(3) exactly (window twin), bucket sizes follow the
@@ -32,10 +32,8 @@ class PplBucketsSpec extends SparkSpec {
   }
 
   test("under the production initial width no stage runs more tasks than cores") {
-    val stages = withConf(Session.wideShuffles: _*) {
-      Trace.during(spark) {
-        TextOps.textPplBuckets(spark, dir).write.format("noop").mode("overwrite").save()
-      }
+    val stages = Trace.during(spark) {
+      TextOps.textPplBuckets(spark, dir).write.format("noop").mode("overwrite").save()
     }
     val cores = spark.sparkContext.defaultParallelism
     val wide = stages.filter(_.tasks > cores)
@@ -44,9 +42,9 @@ class PplBucketsSpec extends SparkSpec {
 
   test("the range order survives AQE coalescing into several partitions") {
     var out = Set.empty[(Long, String, Double, Int)]
-    val stages = withConf(Session.wideShuffles ++ Seq(
+    val stages = withConf(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k"): _*) {
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k") {
       Trace.during(spark) { out = tuples(TextOps.textPplBuckets(spark, dir)) }
     }
     // the zipWithIndex offset pass runs one task per coalesced range

@@ -78,13 +78,7 @@ class UnigramSpec extends SparkSpec {
   }
 
   test("viterbi: fuzz vs brute-force dp, strict no-fallback codegen") {
-    val conf = spark.conf
-    val prevFallback = conf.get("spark.sql.codegen.fallback")
-    val prevExcluded = conf.getOption("spark.sql.optimizer.excludedRules")
-    try {
-      conf.set("spark.sql.codegen.fallback", "false")
-      conf.set("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    withStrictCodegen {
       // alphabet includes a non-BMP char (surrogate pair in UTF-16):
       // the kernel must index by code point, not by Java char
       val alpha = Seq("a", "b", "c", "😀")
@@ -105,12 +99,6 @@ class UnigramSpec extends SparkSpec {
       for (w <- words)
         assert(got(w).map(_.toList) === bruteDp(w, m, Unigram.MaxPieceLen).map(_._2),
           s"word '$w'")
-    } finally {
-      conf.set("spark.sql.codegen.fallback", prevFallback)
-      prevExcluded match {
-        case Some(v) => conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => conf.unset("spark.sql.optimizer.excludedRules")
-      }
     }
   }
 
