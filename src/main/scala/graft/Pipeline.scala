@@ -36,14 +36,22 @@ import org.apache.spark.sql.functions._
   * shrinking perplexity-kept and mixed subsets of it. A shuffled gate
   * join leaves the gated cut hash-partitioned by `doc_id` and the cut
   * keeps that partitioning, so the stage-2 anti-join does not shuffle
-  * it again. [[run]] frees those cuts, and the ones its operators
-  * make internally, before it returns.
+  * it again. [[run]] frees those cuts, and the cuts and cached frames
+  * its operators make internally, before it returns.
   */
 object Pipeline {
 
   /** Run the chain, returning per-stage counts (and writing the final
-    * corpus under `outDir/corpus`, partitioned by split). Every RDD
-    * the run persists is unpersisted before it returns.
+    * corpus under `outDir/corpus`, partitioned by split). The run is one
+    * [[Caches.scoped]] body, so both cache layers it fills are released
+    * before it returns: the CacheManager entries its operators
+    * [[Caches.share]] (the perplexity model's unigram and bigram
+    * frames, the mixture's per-source totals) and every RDD it
+    * persists (the stage cuts and the operators' internal cuts).
+    * Caches that existed before the call survive it, and a call inside
+    * another scope releases only its own. A session that calls it
+    * repeatedly therefore holds no more after each call than before
+    * the first.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       tokenBudget: Long = 10000L, unimax: Boolean = false)
@@ -103,9 +111,12 @@ object Pipeline {
     * `*On(edges)` seams, instead of paying the build per rider as the
     * self-contained registered keys do (5 riders × the build). Returns
     * the per-rider headline counts; the seam-equality spec pins each
-    * On output equal to its registered key.
+    * On output equal to its registered key. Like [[run]] it runs
+    * under [[Caches.scoped]], so the edge and mutual-edge cuts and the
+    * riders' own materializations are released before it returns.
     */
-  def graphAudit(spark: SparkSession, sfDir: String): Map[String, Long] = {
+  def graphAudit(spark: SparkSession, sfDir: String)
+      : Map[String, Long] = Caches.scoped(spark) {
     val nodes = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val labels = Tables.load(spark, sfDir, "embeddings")
@@ -121,38 +132,33 @@ object Pipeline {
     val mutual = graft.ops.Similarity.mutualEdges(edges,
         graft.ops.Similarity.MutualThreshold)
       .transform(Lineage.cut)
-    try {
-      // One COLLECT for all six rider headlines (r17): each count was
-      // its own sequential action, serializing six small jobs at the
-      // end of an audit that is latency-bound at sf0.1 (core-ratio
-      // ~1.0, r16 verdict item 2). The iterative riders cut, count
-      // and (below the broadcast threshold) collect and solve their
-      // graph on the driver while their frames are CONSTRUCTED; only
-      // above Lineage.fitsDriver do they run their distributed loop
-      // rounds eagerly there. The six final aggregations share one
-      // job whose independent subtrees the scheduler runs
-      // concurrently. Values are identical by construction — each
-      // union leg is exactly the old count/distinct-count.
-      val legs: Seq[(String, DataFrame)] = Seq(
-        "n_edges" -> edges.select(count(lit(1)).as("n")),
-        "n_outliers" -> graft.ops.Similarity.knnDensityOn(nodes, edges)
-          .filter(col("outlier")).select(count(lit(1)).as("n")),
-        "n_misclassified" -> graft.ops.Similarity.knnClassifyOn(edges, labels)
-          .filter(!col("correct")).select(count(lit(1)).as("n")),
-        "n_clusters" -> graft.ops.Similarity.semanticClustersOnMutual(nodes, mutual)
-          .select(countDistinct(col("cluster")).as("n")),
-        "n_hubs" -> graft.ops.Similarity.knnHubnessOn(nodes, edges)
-          .filter(col("hub")).select(count(lit(1)).as("n")),
-        "n_ranked" -> graft.ops.Similarity.pageRankOnMutual(nodes, mutual)
-          .select(count(lit(1)).as("n")))
-      val all = legs.map { case (k, df) => df.select(lit(k).as("k"), col("n")) }
-        .reduce(_.unionAll(_)).collect()
-      val byKey = all.map(r => r.getString(0) -> r.getLong(1)).toMap
-      legs.map { case (k, _) => k -> byKey(k) }.toMap
-    } finally {
-      Lineage.free(mutual)
-      Lineage.free(edges)
-    }
+    // One COLLECT for all six rider headlines (r17): each count was
+    // its own sequential action, serializing six small jobs at the
+    // end of an audit that is latency-bound at sf0.1 (core-ratio
+    // ~1.0, r16 verdict item 2). The iterative riders cut, count
+    // and (below the broadcast threshold) collect and solve their
+    // graph on the driver while their frames are CONSTRUCTED; only
+    // above Lineage.fitsDriver do they run their distributed loop
+    // rounds eagerly there. The six final aggregations share one
+    // job whose independent subtrees the scheduler runs
+    // concurrently. Values are identical by construction — each
+    // union leg is exactly the old count/distinct-count.
+    val legs: Seq[(String, DataFrame)] = Seq(
+      "n_edges" -> edges.select(count(lit(1)).as("n")),
+      "n_outliers" -> graft.ops.Similarity.knnDensityOn(nodes, edges)
+        .filter(col("outlier")).select(count(lit(1)).as("n")),
+      "n_misclassified" -> graft.ops.Similarity.knnClassifyOn(edges, labels)
+        .filter(!col("correct")).select(count(lit(1)).as("n")),
+      "n_clusters" -> graft.ops.Similarity.semanticClustersOnMutual(nodes, mutual)
+        .select(countDistinct(col("cluster")).as("n")),
+      "n_hubs" -> graft.ops.Similarity.knnHubnessOn(nodes, edges)
+        .filter(col("hub")).select(count(lit(1)).as("n")),
+      "n_ranked" -> graft.ops.Similarity.pageRankOnMutual(nodes, mutual)
+        .select(count(lit(1)).as("n")))
+    val all = legs.map { case (k, df) => df.select(lit(k).as("k"), col("n")) }
+      .reduce(_.unionAll(_)).collect()
+    val byKey = all.map(r => r.getString(0) -> r.getLong(1)).toMap
+    legs.map { case (k, _) => k -> byKey(k) }.toMap
   }
 
   def main(args: Array[String]): Unit = {

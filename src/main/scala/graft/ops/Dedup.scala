@@ -1299,7 +1299,7 @@ object Dedup {
     // cached: feeds the filter build AND the exact-verify anti-join
     val hist = docs.filter(col("doc_id") < splitId)
       .select(digest.as("tkey")).distinct()
-      .cache()
+      .transform(graft.Caches.share)
     newAgainstHistoryBloom(
       docs.filter(col("doc_id") >= splitId)
         .select(col("doc_id"), digest.as("tkey")),

@@ -55,7 +55,7 @@ object Eda {
     * queries.
     */
   private[ops] def withProportion(counts: DataFrame): DataFrame = {
-    val c = counts.cache()
+    val c = graft.Caches.share(counts)
     c.crossJoin(broadcast(c.agg(sum(col("cnt")).as("_total"))))
       .withColumn("proportion",
         col("cnt").cast("double") / col("_total").cast("double"))

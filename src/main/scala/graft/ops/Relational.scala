@@ -149,7 +149,7 @@ object Relational {
       .filter(col("o_orderpriority") === "1-URGENT")
       .groupBy(to_date(col("o_orderdate")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-      .cache()
+      .transform(graft.Caches.share)
     val spine = daily
       .agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
       .select(explode(sequence(col("lo"), col("hi"),

@@ -349,7 +349,7 @@ object Sampling {
     // cached (#sources rows): consumed by the total fold AND the
     // budget projection (the sampleTemperature lesson)
     val perSource = toks.groupBy("source")
-      .agg(sum(col("n_toks")).as("t_s")).cache()
+      .agg(sum(col("n_toks")).as("t_s")).transform(graft.Caches.share)
     val tot = perSource
       .agg(aggregate(
         array_sort(collect_list(struct(col("source"),
@@ -676,7 +676,7 @@ object Sampling {
       .withColumn("w",
         if (alpha == 0.5) sqrt(col("n_l").cast("double"))
         else pow(col("n_l").cast("double"), lit(alpha)))
-      .cache()
+      .transform(graft.Caches.share)
     val tot = weighted
       .agg(aggregate(array_sort(collect_list(struct(col("lang"), col("w")))),
         lit(0.0), (acc, x) => acc + x.getField("w")).as("tot"))

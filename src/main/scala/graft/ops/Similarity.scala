@@ -286,7 +286,7 @@ object Similarity {
     */
   private[ops] def trainedPivots(corp: DataFrame, nLists: Int,
       iters: Int = 2): Array[(Long, Array[Float])] = {
-    val cached = corp.cache() // the Lloyd loop scans it 2·iters+1 times
+    val cached = graft.Caches.share(corp) // the Lloyd loop scans it 2·iters+1 times
     lloydCentroids(cached, nLists, iters, orderedFold = false,
         init = "parallel")
       .map { case (i, c) => (i.toLong, c.map(_.toFloat)) }
@@ -356,7 +356,7 @@ object Similarity {
   def annIvfPq(s: SparkSession, dir: String, nLists: Int = NLists,
       nProbe: Int = NProbe, m: Int = PqM, k: Int = PqK,
       rerank: Int = PqRerank): DataFrame = {
-    val corp = corpus(s, dir).cache() // codebooks + encode + re-rank
+    val corp = graft.Caches.share(corpus(s, dir)) // codebooks + encode + re-rank
     val piv = ivfPivots(s, dir, nLists)
     val books = pqCodebooks(corp, m, k)
     annIvfPqOn(corp, querySet(s, dir), piv, books, nProbe, rerank)
@@ -831,7 +831,7 @@ object Similarity {
       init: String = "hash", sorted: Boolean = true): DataFrame = {
     // consumed 2·iters+1 times (assignments + updates) — cache, or
     // every pass re-scans the parquet
-    val vecs = vecsIn.cache()
+    val vecs = graft.Caches.share(vecsIn)
     val centroids = lloydCentroids(vecs, k, iters, orderedFold, init)
     val out = vecs
       .withColumn("p", bestOf(col("embedding"), centroids.toIndexedSeq))

@@ -722,7 +722,7 @@ object TextOps {
         graft.functions.wsTokenCount(col("text")).as("n_words"),
         graft.functions.distinctTokenCount(col("text")).as("n_distinct"),
         md5(col("text").cast("binary")).as("tkey"))
-      .cache()
+      .transform(graft.Caches.share)
     val copies = perDoc.groupBy("tkey").agg(count(lit(1)).as("copies"))
     perDoc.join(copies, "tkey")
       .groupBy("source")
@@ -800,7 +800,7 @@ object TextOps {
     val repToks = reps.select(col("rep"), col("m"), col("a"))
     val uni = repToks.select(explode(col("a")).as("t1"), col("m"))
       .groupBy("t1").agg(sum(col("m")).as("c1"))
-      .cache() // feeds the model join AND the vocab-size total
+      .transform(graft.Caches.share) // feeds the model join AND the vocab-size total
     val vocab = broadcast(uni.agg(count(lit(1)).as("v")))
     val bigrams = repToks.filter(size(col("a")) >= 2)
       .select(col("rep"), col("m"), posexplode(expr(
@@ -808,7 +808,7 @@ object TextOps {
           "i -> struct(element_at(a, i) AS t1, element_at(a, i + 1) AS t2))")))
       .select(col("rep"), col("m"), col("pos"), col("col.t1").as("t1"),
         col("col.t2").as("t2"))
-      .cache() // consumed twice: the model aggregate and the scoring rows
+      .transform(graft.Caches.share) // consumed twice: the model aggregate and the scoring rows
     val bi = bigrams.groupBy("t1", "t2").agg(sum(col("m")).as("c12"))
     // attach c1 to the MODEL (distinct-bigram-sized) rather than the
     // corpus-sized scoring rows: one keyed join on (t1,t2) touches the
@@ -865,7 +865,7 @@ object TextOps {
       .transform(graft.Lineage.cut) // feeds uni AND bi
     val uni = trainReps.select(explode(col("a")).as("t1"), col("m"))
       .groupBy("t1").agg(sum(col("m")).as("c1"))
-      .cache() // feeds the model join AND the vocab-size total
+      .transform(graft.Caches.share) // feeds the model join AND the vocab-size total
     val vocab = broadcast(uni.agg(count(lit(1)).as("v")))
     val bi = trainReps.filter(size(col("a")) >= 2)
       .select(col("m"), explode(bigramExpr).as("bg"))
@@ -1109,7 +1109,7 @@ object TextOps {
       .filter(col("tf") > 0)
       .select(col("doc_id"), col("dl"),
         element_at(typedLit(termSet), col("i") + 1).as("t"), col("tf"))
-      .cache() // feeds the df aggregate AND the scoring rows
+      .transform(graft.Caches.share) // feeds the df aggregate AND the scoring rows
     val dfreq = tf.groupBy("t").agg(count(lit(1)).as("df"))
     val w = tf
       .join(broadcast(dfreq), "t")
@@ -1155,7 +1155,7 @@ object TextOps {
       .select(col("rep"),
         explode(filter(wsTokens(col("text")), t => t =!= "")).as("t"))
       .groupBy("rep", "t").agg(count(lit(1)).as("tf"))
-      .cache() // consumed twice: the df aggregate and the scoring rows
+      .transform(graft.Caches.share) // consumed twice: the df aggregate and the scoring rows
     val df = tf.groupBy("t").agg(count(lit(1)).as("df"))
     val n = broadcast(reps.agg(count(lit(1)).as("n")))
     val topk = udaf(new graft.functions.TopKStrAgg(k))
@@ -1195,7 +1195,7 @@ object TextOps {
       .select(col("source"),
         explode(filter(wsTokens(col("text")), t => t =!= "")).as("t"))
       .distinct()
-      .cache() // consumed twice: per-source sizes and per-token sets
+      .transform(graft.Caches.share) // consumed twice: per-source sizes and per-token sets
     val sz = st.groupBy("source").agg(count(lit(1)).as("v"))
     val inter = st.groupBy("t")
       .agg(sort_array(collect_set(col("source"))).as("ss"))
@@ -1249,7 +1249,7 @@ object TextOps {
       .select(col("source"),
         explode(filter(wsTokens(col("text")), t => t =!= "")).as("t"))
       .groupBy("source", "t").agg(count(lit(1)).as("f"))
-      .cache() // consumed twice: the vocab stats and the top-k rank fit
+      .transform(graft.Caches.share) // consumed twice: the vocab stats and the top-k rank fit
     val stats = tf.groupBy("source").agg(
       sum(col("f")).as("n_tokens"),
       count(lit(1)).as("vocab"),
@@ -1322,7 +1322,7 @@ object TextOps {
       .transform(graft.Lineage.cut)
     val uni = arrs.select(explode(col("a")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
-      .cache() // consumed three times: N total + the x and y joins
+      .transform(graft.Caches.share) // consumed three times: N total + the x and y joins
     val nTot = broadcast(uni.agg(sum(col("c")).as("n")))
     val big = arrs.filter(size(col("a")) >= 2)
       .select(explode(expr(
@@ -1330,7 +1330,7 @@ object TextOps {
           " (t, i) -> named_struct('x', t, 'y', a[i + 1]))")).as("p"))
       .groupBy(col("p.x").as("x"), col("p.y").as("y"))
       .agg(count(lit(1)).as("c_xy"))
-      .cache() // consumed twice: the B total and the scoring rows
+      .transform(graft.Caches.share) // consumed twice: the B total and the scoring rows
     val bTot = broadcast(big.agg(sum(col("c_xy")).as("b")))
     big.filter(col("c_xy") >= minCount)
       .join(uni.select(col("t").as("x"), col("c").as("c_x")), "x")
@@ -1432,10 +1432,10 @@ object TextOps {
     val docToRep = Collapse.docToRep(proj, reps, "tkey")
     val toks = reps.select(col("rep"), col("mt"), col("mr"),
         posexplode(col("a")).as(Seq("pos", "t")))
-      .cache() // feeds the model counts AND the scoring rows
+      .transform(graft.Caches.share) // feeds the model counts AND the scoring rows
     val uni = toks.groupBy("t")
       .agg(sum(col("mt")).as("ct"), sum(col("mr")).as("cr"))
-      .cache() // feeds the totals AND the scoring join
+      .transform(graft.Caches.share) // feeds the totals AND the scoring join
     val totals = broadcast(uni.agg(sum(col("ct")).as("nt"),
       sum(col("cr")).as("nr"), count(lit(1)).as("v")))
     // inner join: the model is trained on the scored corpus itself,
@@ -1490,7 +1490,7 @@ object TextOps {
       .transform(graft.Lineage.cut)
     val uni = trainReps.select(explode(col("a")).as("t"), col("mt"), col("mr"))
       .groupBy("t").agg(sum(col("mt")).as("ct"), sum(col("mr")).as("cr"))
-      .cache() // feeds the totals AND the scoring join
+      .transform(graft.Caches.share) // feeds the totals AND the scoring join
     val totals = broadcast(uni.agg(sum(col("ct")).as("nt"),
       sum(col("cr")).as("nr"), count(lit(1)).as("v")))
     val batchProj = proj.filter(col("doc_id") >= splitId)
@@ -1564,10 +1564,10 @@ object TextOps {
     val docToRep = Collapse.docToRep(proj, reps, "tkey")
     val toks = reps.select(col("rep"), col("mt"), col("mr"),
         posexplode(col("a")).as(Seq("pos", "t")))
-      .cache() // feeds the model counts AND the scoring rows
+      .transform(graft.Caches.share) // feeds the model counts AND the scoring rows
     val uni = toks.groupBy("t")
       .agg(sum(col("mt")).as("ct"), sum(col("mr")).as("cr"))
-      .cache() // feeds the totals AND the scoring join
+      .transform(graft.Caches.share) // feeds the totals AND the scoring join
     // token totals + vocab size + class priors: two tiny aggregates,
     // one broadcast row
     val totals = broadcast(
@@ -1653,7 +1653,7 @@ object TextOps {
       .transform(graft.Lineage.cut) // feeds uni AND the priors
     val uni = trainReps.select(explode(col("a")).as("t"), col("mt"), col("mr"))
       .groupBy("t").agg(sum(col("mt")).as("ct"), sum(col("mr")).as("cr"))
-      .cache() // feeds the totals AND the scoring join
+      .transform(graft.Caches.share) // feeds the totals AND the scoring join
     val totals = broadcast(
       uni.agg(sum(col("ct")).as("nt"), sum(col("cr")).as("nr"),
           count(lit(1)).as("v"))

@@ -119,13 +119,11 @@ object EmbedStreams {
         threshold)
       .withColumn("ingest_batch", lit(batchId))
       .transform(graft.Lineage.cut) // 3 sinks below; also self-overwrite
-    try {
-      Replay.append(graft.ops.Similarity.srpTableBuckets(kept, "vec_id", "embedding",
-          graft.ops.Dedup.embedPlanes, graft.ops.Dedup.embedTables)
-        .join(kept.select("vec_id", "ingest_batch"), "vec_id")
-        .withColumn("bgrp", sigGroup(col("bucket"))), sigsDir, "tbl", "bgrp")
-      Replay.append(kept, vecsDir)
-      Replay.append(kept, outDir)
-    } finally graft.Lineage.free(kept)
+    Replay.append(graft.ops.Similarity.srpTableBuckets(kept, "vec_id", "embedding",
+        graft.ops.Dedup.embedPlanes, graft.ops.Dedup.embedTables)
+      .join(kept.select("vec_id", "ingest_batch"), "vec_id")
+      .withColumn("bgrp", sigGroup(col("bucket"))), sigsDir, "tbl", "bgrp")
+    Replay.append(kept, vecsDir)
+    Replay.append(kept, outDir)
   }
 }

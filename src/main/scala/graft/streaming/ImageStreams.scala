@@ -125,15 +125,13 @@ object ImageStreams {
         historyBandsRead(spark, hashesDir, batchId, hashed), maxHamming)
       .withColumn("ingest_batch", lit(batchId))
       .transform(graft.Lineage.cut) // 2 sinks below; also self-overwrite
-    try {
-      // project media_id away: the history read only ever consumes
-      // (dhash_hi, dhash_lo, band, bhash) — 8 hash+band rows per
-      // admitted image, nothing else (review finding: carrying the id
-      // bloated the index ~a third for a column every read dropped)
-      Replay.append(graft.ops.Multimodal.bandRowsOf(
-          admitted.select("dhash_hi", "dhash_lo", "ingest_batch"))
-        .withColumn("bgrp", bandGroup(col("bhash"))), hashesDir, "band", "bgrp")
-      Replay.append(admitted, outDir)
-    } finally graft.Lineage.free(admitted)
+    // project media_id away: the history read only ever consumes
+    // (dhash_hi, dhash_lo, band, bhash) — 8 hash+band rows per
+    // admitted image, nothing else (review finding: carrying the id
+    // bloated the index ~a third for a column every read dropped)
+    Replay.append(graft.ops.Multimodal.bandRowsOf(
+        admitted.select("dhash_hi", "dhash_lo", "ingest_batch"))
+      .withColumn("bgrp", bandGroup(col("bhash"))), hashesDir, "band", "bgrp")
+    Replay.append(admitted, outDir)
   }
 }

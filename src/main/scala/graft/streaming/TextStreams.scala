@@ -89,11 +89,9 @@ object TextStreams {
     val kept = survivors(keyed, hist, bloomBits, bloomHashes)
       .withColumn("ingest_batch", lit(batchId))
       .transform(graft.Lineage.cut)
-    try {
-      Replay.append(kept.select("tkey", "ingest_batch")
-        .withColumn("kgrp", kgrp(col("tkey"))), indexDir, "kgrp")
-      Replay.append(kept, outDir)
-    } finally graft.Lineage.free(kept)
+    Replay.append(kept.select("tkey", "ingest_batch")
+      .withColumn("kgrp", kgrp(col("tkey"))), indexDir, "kgrp")
+    Replay.append(kept, outDir)
   }
 
   /** The per-batch survivor frame — one seam so the spec can assert
@@ -157,15 +155,13 @@ object TextStreams {
     val cleaned = graft.ops.TextOps.cleanCore(surv, spans, hist)
       .withColumn("ingest_batch", lit(batchId))
       .transform(graft.Lineage.cut) // self-overwrite + two sinks
-    try {
-      // index append: the batch's NEW distinct span digests (replay
-      // overwrites exactly its own partitions)
-      Replay.append(spans.select("h").distinct()
-        .join(hist.select("h").distinct(), Seq("h"), "left_anti")
-        .withColumn("ingest_batch", lit(batchId))
-        .withColumn("kgrp", kgrp(col("h"))), indexDir, "kgrp")
-      Replay.append(cleaned, outDir)
-    } finally graft.Lineage.free(cleaned)
+    // index append: the batch's NEW distinct span digests (replay
+    // overwrites exactly its own partitions)
+    Replay.append(spans.select("h").distinct()
+      .join(hist.select("h").distinct(), Seq("h"), "left_anti")
+      .withColumn("ingest_batch", lit(batchId))
+      .withColumn("kgrp", kgrp(col("h"))), indexDir, "kgrp")
+    Replay.append(cleaned, outDir)
   }
 
   /** E11: streaming quality gate — score every arriving micro-batch

@@ -191,6 +191,13 @@ object GraftSqlShim {
   def broadcastThreshold(spark: SparkSession): Long =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 
+  /** How many plans the session's CacheManager holds
+    * (`numCachedEntries` is `private[sql]`): what the specs read to pin
+    * that [[graft.Caches.scoped]] leaves no entry behind.
+    */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.numCachedEntries
+
   /** Drain the listener bus — listeners ([[graft.Trace]], the SQL
     * status store) receive events asynchronously, so a reader must
     * flush before totalling. `listenerBus` is `private[spark]`.

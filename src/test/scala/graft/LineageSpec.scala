@@ -163,4 +163,40 @@ class LineageSpec extends SparkSpec {
     assert(hard.count() === 20)
     Caches.sweep(spark)
   }
+
+  test("scoped releases the entries shared inside it; a cache made before it survives") {
+    import org.apache.spark.storage.StorageLevel.NONE
+    Caches.sweep(spark)
+    val pre = (1 to 30).toDF("n").cache()
+    pre.count()
+    val level = pre.storageLevel
+    val entries = org.apache.spark.sql.GraftSqlShim.cachedEntries(spark)
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    var shared, inner: DataFrame = null
+    Caches.scoped(spark) {
+      shared = Caches.share((1 to 20).toDF("n").filter(col("n") > 3))
+      assert(shared.count() === 17)
+      Caches.scoped(spark) {
+        inner = Caches.share((1 to 10).toDF("m"))
+        inner.count()
+      }
+      // a nested scope releases only what was shared while it was
+      // innermost
+      assert(inner.storageLevel === NONE)
+      assert(shared.storageLevel !== NONE)
+      // re-sharing the pre-existing plan records nothing: that entry
+      // is not this scope's to release
+      val again = (1 to 30).toDF("n")
+      assert(again.storageLevel === level, "the same plan should hit pre's entry")
+      assert(Caches.share(again).count() === 30)
+    }
+    // the entry went with its blocks, not the blocks alone
+    assert(shared.storageLevel === NONE)
+    assert(pre.storageLevel === level)
+    val plan = pre.filter(col("n") > 1).queryExecution.executedPlan.toString
+    assert(plan.contains("InMemoryTableScan"), plan)
+    assert(org.apache.spark.sql.GraftSqlShim.cachedEntries(spark) === entries)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === rdds)
+    Caches.sweep(spark)
+  }
 }

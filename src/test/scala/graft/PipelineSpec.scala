@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.GraftSqlShim.cachedEntries
 import org.apache.spark.sql.functions._
 
 /** The chained curation pipeline (gate → CCNet perplexity-tercile
@@ -63,12 +64,16 @@ class PipelineSpec extends SparkSpec {
     val out = Files.createTempDirectory("pipe_cuts").toString
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
+    val entries = cachedEntries(spark)
     var counts = Map.empty[String, Long]
     val stages = Trace.during(spark) { counts = Pipeline.run(spark, sf, out) }
     assert(counts("n_input") === 500L)
     // the stage cuts and the operators' internal cuts and caches
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
     assert(left.isEmpty, left.values.map(_.toDebugString).mkString("\n"))
+    // and the cached plans: freeing their blocks alone leaves each
+    // entry's plan pinning the cut lineage it reads
+    assert(cachedEntries(spark) === entries)
     // each stage materialized once, so no later stage re-runs the
     // gate: the cut chain runs ~60 stages here, the uncut one ran 121;
     // the bound leaves ~25% for AQE re-planning
@@ -80,6 +85,19 @@ class PipelineSpec extends SparkSpec {
     val tasks = stages.map(_.tasks).sum
     assert(tasks <= 90, s"$tasks tasks:\n" +
       stages.map(s => s"${s.id} ${s.tasks} ${s.name}").mkString("\n"))
+  }
+
+  test("repeated runs in one session hold no more than the first started with") {
+    val sf = "/root/testdata/sf0.001"
+    val sc = spark.sparkContext
+    val entries = cachedEntries(spark)
+    val rdds = sc.getPersistentRDDs.keySet
+    for (i <- 1 to 3) {
+      val out = Files.createTempDirectory(s"pipe_rep$i").toString
+      assert(Pipeline.run(spark, sf, out)("n_input") === 500L)
+      assert(cachedEntries(spark) === entries, s"cached plans after call $i")
+      assert(sc.getPersistentRDDs.keySet === rdds, s"persisted RDDs after call $i")
+    }
   }
 
   test("--unimax swaps stage 3 for the per-language waterfill (D55)") {

@@ -2,7 +2,10 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.GraftSqlShim.cachedEntries
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
 
 /** E12: the streaming decontamination gate must verdict micro-batches
@@ -112,5 +115,40 @@ class DecontamGateStreamSpec extends SparkSpec {
         .distinct(),
       7, 10)
     assert(rowsOf(out) === got, "replayed batch diverged from its commit")
+  }
+
+  test("micro-batches leave no cache behind; the frozen eval set stays cached") {
+    val evalDir = Files.createTempDirectory("dgs_eval").toString + "/e"
+    val src = Files.createTempDirectory("dgs_src").toString
+    val out = Files.createTempDirectory("dgs_out").toString
+    val ckpt = Files.createTempDirectory("dgs_ckpt").toString
+    eval.toDF("doc_id", "text", "source").write.parquet(evalDir)
+    // the frozen set's plan, as decontamGateStream builds it: its
+    // storageLevel reads the session's entry for that plan
+    val frozen = spark.read.parquet(evalDir)
+      .select(explode(graft.ops.Dedup.shingles(col("text"))).as("g")).distinct()
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("text", StringType), StructField("source", StringType)))
+    // start on an empty source, so the snapshot below sees the frozen
+    // set cached and materialized and no micro-batch yet
+    val q = TextStreams.decontamGateStream(spark, evalDir, src, out, ckpt,
+      docsSchema = Some(schema))
+    try {
+      q.processAllAvailable()
+      val level = frozen.storageLevel
+      assert(level !== StorageLevel.NONE)
+      val entries = cachedEntries(spark)
+      val rdds = spark.sparkContext.getPersistentRDDs.keySet
+      val batch2 = Seq((105L, "eta theta one two three four five six", "crawl"))
+      for (((rows, i)) <- Seq(batch0, batch1, batch2).zipWithIndex) {
+        publish(src, s"b$i.parquet", rows)
+        q.processAllAvailable()
+        assert(cachedEntries(spark) === entries, s"cached plans after batch $i")
+        assert(spark.sparkContext.getPersistentRDDs.keySet === rdds,
+          s"persisted RDDs after batch $i")
+      }
+      assert(frozen.storageLevel === level, "the frozen eval set lost its cache")
+    } finally q.stop()
+    assert(rowsOf(out).keySet === Set(100L, 101L, 102L, 103L, 104L, 105L))
   }
 }
